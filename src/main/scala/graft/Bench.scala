@@ -180,50 +180,14 @@ object Bench {
     // the within-run median was clean by construction). The only signal
     // that survives that failure mode is a comparison against a DIFFERENT
     // full run, so read the previous committed full-suite detail file
-    // (same sf only) and flag queries whose fresh median exceeds
-    // max(2x prior, prior + 1 s); the metric line carries the suspect
-    // count and the min-of-medians total, the detail file the per-query
-    // prior. A flagged query means "re-run or trust the prior", never a
-    // silent headline.
+    // (same sf and core count, [[priorMediansIn]]) and flag queries whose
+    // fresh median exceeds max(2x prior, prior + 1 s); the metric line
+    // carries the suspect count and the min-of-medians total, the detail
+    // file the per-query prior. A flagged query means "re-run or trust
+    // the prior", never a silent headline.
     val priorMedians: Map[String, Double] =
       if (only.isDefined) Map.empty // subset runs have their own artifact
-      else try {
-        val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
-        if (!java.nio.file.Files.exists(p)) Map.empty
-        else {
-          import org.json4s._
-          def num(v: JValue): Option[Double] = v match {
-            case JDouble(d) => Some(d)
-            case JDecimal(d) => Some(d.toDouble)
-            case JInt(i) => Some(i.toDouble)
-            case JLong(l) => Some(l.toDouble)
-            case _ => None
-          }
-          val j = jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
-          // the prior must come from a like-for-like run: same sf AND same
-          // core count (r17: the driver's 8-core scaling run clobbered the
-          // 32-core detail, and an 8-core prior would poison the 32-core
-          // suspect/min-of-medians logic — the suite runs FASTER at 8
-          // cores, so every 32-core median would read as inflated). A
-          // detail file without a "cpus" field (pre-r18) is accepted as
-          // matching, preserving continuity with the committed baseline.
-          val cpusOk = (j \ "cpus") match {
-            case JNothing => true
-            case v => num(v).contains(cpus.toDouble)
-          }
-          (j \ "sf") match {
-            case JString(s) if s == sfDir && cpusOk =>
-              (j \ "detail") match {
-                case JObject(fields) =>
-                  fields.flatMap { case (name, det) =>
-                    num(det \ "median").map(name -> _)
-                  }.toMap
-                case _ => Map.empty
-              }
-            case _ => Map.empty
-          }
-        }
-      } catch { case _: Throwable => Map.empty }
+      else priorMediansIn(java.nio.file.Paths.get("."), sfDir, cpus)
     def suspect(name: String, med: Double): Boolean =
       priorMedians.get(name).exists(p => med > math.max(p * 2, p + 1.0))
     val nSuspect = results.count { case (q, med) => q.err.isEmpty && suspect(q.name, med) }
@@ -304,5 +268,40 @@ object Bench {
     println(finalLine)
     spark.stop()
     if (nFail > 0) sys.exit(1)
+  }
+
+  /** Per-query medians of the previous full run like this one: the first
+    * of `BENCH_DETAIL.json` and `BENCH_DETAIL_c<cpus>.json` in `dir` whose
+    * `sf` and `cpus` both match. The prior must come from a like-for-like
+    * run (r17: an 8-core scaling run clobbered the 32-core
+    * detail, and the suite runs FASTER at 8 cores, so an 8-core prior
+    * reads every 32-core median as inflated). A file without a `cpus`
+    * field says nothing about its core count, so it never matches.
+    */
+  private[graft] def priorMediansIn(
+      dir: java.nio.file.Path, sfDir: String, cpus: String): Map[String, Double] = {
+    import org.json4s._
+    def num(v: JValue): Option[Double] = v match {
+      case JDouble(d) => Some(d)
+      case JDecimal(d) => Some(d.toDouble)
+      case JInt(i) => Some(i.toDouble)
+      case JLong(l) => Some(l.toDouble)
+      case _ => None
+    }
+    def medians(p: java.nio.file.Path): Option[Map[String, Double]] =
+      try {
+        val j = jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
+        if (j \ "sf" != JString(sfDir) || !num(j \ "cpus").contains(cpus.toDouble)) None
+        else (j \ "detail") match {
+          case JObject(fields) =>
+            Some(fields.flatMap { case (name, det) => num(det \ "median").map(name -> _) }.toMap)
+          case _ => None
+        }
+      } catch { case _: Throwable => None }
+    Seq("BENCH_DETAIL.json", s"BENCH_DETAIL_c$cpus.json").iterator
+      .map(dir.resolve)
+      .flatMap(medians)
+      .nextOption()
+      .getOrElse(Map.empty)
   }
 }

@@ -44,9 +44,6 @@ object Dedup {
     */
   def shingleKernel(text: String): Array[String] = ngramKernel(text, 3)
 
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Word-3-gram shingle sets per doc: (doc_id, shingles, n_shingles).
     * Persisted (MEMORY_AND_DISK) and memoized per (session, dir): the LSH
     * pipeline references this frame three times (banding + both sides of
@@ -57,18 +54,16 @@ object Dedup {
     * MEMORY_AND_DISK spills per-executor and never OOMs.
     */
   private def docShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        import s.implicits._
-        graft.rel.Queries.spread(table(s, d, "documents").select(col("doc_id"), col("text")))
-          .as[(Long, String)]
-          .mapPartitions(_.map { case (id, text) => (id, shingleKernel(text)) })
-          .toDF("doc_id", "sh")
-          .withColumn("n_sh", size(col("sh")))
-          .filter(col("n_sh") > 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    graft.Shared.session(spark, dir, "docShingles") {
+      import spark.implicits._
+      graft.rel.Queries.spread(table(spark, dir, "documents").select(col("doc_id"), col("text")))
+        .as[(Long, String)]
+        .mapPartitions(_.map { case (id, text) => (id, shingleKernel(text)) })
+        .toDF("doc_id", "sh")
+        .withColumn("n_sh", size(col("sh")))
+        .filter(col("n_sh") > 0)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Eagerly materializes the shared shingle frame (the session-scoped
     * equivalent of a pre-computed shingle table at 100 TB) — called from
@@ -77,21 +72,6 @@ object Dedup {
     */
   def warmShared(spark: SparkSession, dir: String): Unit =
     docShingles(spark, dir).count(): Unit
-
-  /** Unpersists and forgets this object's session memos (shingle frame,
-    * converged dedup-group labels) — for long-lived services retiring a
-    * dataset directory; the next consumer rebuilds.
-    */
-  def clearShared(): Unit = {
-    shingleCache.forEach((_, df) => df.unpersist())
-    shingleCache.clear()
-    groupCache.forEach((_, df) => df.unpersist())
-    groupCache.clear()
-    benchGramCache.forEach((_, v) => v._1.unpersist())
-    benchGramCache.clear()
-    prEdgeCache.forEach((_, v) => v._1.unpersist())
-    prEdgeCache.clear()
-  }
 
   /** In-bucket pair expansion (all i < j over sorted postings) as a typed
     * flatMap — the bucket-collect alternative to a self-join: one groupBy
@@ -594,15 +574,12 @@ object Dedup {
     * data rows. Canonical = min doc_id of the component, matching
     * [[exactDedup]].
     */
-  private val groupCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Memoized per (session, dir): the converged label frame stays
     * persisted (it IS the result), so without the memo every invocation
     * would leak one cached frame; with it, repeated calls share the one.
     */
   def dedupGroups(spark: SparkSession, dir: String): DataFrame =
-    groupCache.computeIfAbsent((spark, dir), { case (s, d) => computeDedupGroups(s, d) })
+    graft.Shared.session(spark, dir, "dedupGroups")(computeDedupGroups(spark, dir))
 
   private def computeDedupGroups(spark: SparkSession, dir: String): DataFrame = {
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -676,9 +653,6 @@ object Dedup {
     * per-node inflow sums are FP-order-dependent); PipelineSuite checks a
     * driver-side reference within 1e-6 and that total rank is conserved.
     */
-  private val prEdgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), (DataFrame, DataFrame, Long, Long)]()
-
   /** The degree-annotated symmetric edge list of a similarity graph
     * (keyed by `graph`: the exact q16 pairs or the LSH-verified q137
     * pairs), plus (n docs, n isolated docs) — persisted and memoized:
@@ -688,25 +662,23 @@ object Dedup {
     */
   private def prEdges(
       spark: SparkSession, dir: String, graph: String): (DataFrame, DataFrame, Long, Long) =
-    prEdgeCache.computeIfAbsent(
-      (spark, dir, graph),
-      { case (s, d, g) =>
-        val nDocs = table(s, d, "documents").count()
-        val src = if (g == "lsh") minhashLsh(s, d) else ngramJaccard(s, d)
-        val pairs = src.select(col("d1"), col("d2"))
-        val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
-          .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
-        val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        val edgesDeg = edges.join(outDeg, "src")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // connected-node list, checkpointed: every iteration's seed and
-        // the final isolated-docs anti-join reference it, and a
-        // localCheckpoint keeps those plans anchored to a flat RDD leaf
-        // instead of re-rendering the whole cached edge pipeline
-        val nodes = edgesDeg.select(col("src").as("doc_id")).distinct().localCheckpoint()
-        val nConnected = nodes.count()
-        (edgesDeg, nodes, nDocs, nDocs - nConnected)
-      })
+    graft.Shared.session(spark, dir, s"prEdges:$graph") {
+      val nDocs = table(spark, dir, "documents").count()
+      val src = if (graph == "lsh") minhashLsh(spark, dir) else ngramJaccard(spark, dir)
+      val pairs = src.select(col("d1"), col("d2"))
+      val edges = pairs.select(col("d1").as("src"), col("d2").as("dst"))
+        .unionByName(pairs.select(col("d2").as("src"), col("d1").as("dst")))
+      val outDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      val edgesDeg = edges.join(outDeg, "src")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // connected-node list, checkpointed: every iteration's seed and
+      // the final isolated-docs anti-join reference it, and a
+      // localCheckpoint keeps those plans anchored to a flat RDD leaf
+      // instead of re-rendering the whole cached edge pipeline
+      val nodes = edgesDeg.select(col("src").as("doc_id")).distinct().localCheckpoint()
+      val nConnected = nodes.count()
+      (edgesDeg, nodes, nDocs, nDocs - nConnected)
+    }
 
   def similarityPageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankOver(spark, dir, "exact")
@@ -985,33 +957,28 @@ object Dedup {
     *     emitted hit counts are exact and hash-equal to [[decontaminate]]
     *     (same oracle as q54).
     */
-  private val benchGramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Long)]()
-
   /** Distinct benchmark n-grams + their count, persisted and memoized per
     * (session, dir) like [[docShingles]]'s shingle frame — every
     * [[decontaminateBloom]] invocation (bench warmup + iterations, the
     * test JVM) reuses ONE cached copy instead of leaking a fresh persist
-    * per call. Freed by [[clearShared]].
+    * per call. Freed by [[graft.Shared.clear]].
     */
   private def benchGramsShared(spark: SparkSession, dir: String): (DataFrame, Long) =
-    benchGramCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        import s.implicits._
-        val docs = table(s, d, "documents")
-          .filter(col("source") === BenchSource)
-          .select(col("doc_id"), col("text"))
-        val g = docs
-          .as[(Long, String)]
-          .mapPartitions(_.flatMap { case (id, t) =>
-            ngramKernel(t, DecontGramSize).iterator.map(g => (id, g))
-          })
-          .toDF("doc_id", "gram")
-          .select(col("gram")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (g, g.count())
-      })
+    graft.Shared.session(spark, dir, "benchGrams") {
+      import spark.implicits._
+      val docs = table(spark, dir, "documents")
+        .filter(col("source") === BenchSource)
+        .select(col("doc_id"), col("text"))
+      val g = docs
+        .as[(Long, String)]
+        .mapPartitions(_.flatMap { case (id, t) =>
+          ngramKernel(t, DecontGramSize).iterator.map(g => (id, g))
+        })
+        .toDF("doc_id", "gram")
+        .select(col("gram")).distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (g, g.count())
+    }
 
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

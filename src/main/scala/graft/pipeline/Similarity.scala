@@ -44,30 +44,25 @@ object Similarity {
   val MaxProbes = 64
   val ProbeCapSalt = "probe-cap:"
 
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Long]]()
-
   /** The capped probe-id set — one distributed TakeOrdered over the
     * ProbeEvery multiples, memoized per (session, dir); MaxProbes longs
     * on the driver regardless of corpus size.
     */
   private[pipeline] def probeIds(spark: SparkSession, dir: String): Array[Long] =
-    probeCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        import s.implicits._
-        vectors(s, d)
-          .filter(col("vec_id") % ProbeEvery === 0)
-          .select(col("vec_id"),
-            substring(md5(concat(lit(ProbeCapSalt), col("vec_id").cast("string"))), 1, 12)
-              .as("pk"))
-          .orderBy(col("pk"), col("vec_id"))
-          .limit(MaxProbes)
-          .as[(Long, String)]
-          .collect()
-          .map(_._1)
-          .sorted
-      })
+    graft.Shared.session(spark, dir, "probeIds") {
+      import spark.implicits._
+      vectors(spark, dir)
+        .filter(col("vec_id") % ProbeEvery === 0)
+        .select(col("vec_id"),
+          substring(md5(concat(lit(ProbeCapSalt), col("vec_id").cast("string"))), 1, 12)
+            .as("pk"))
+        .orderBy(col("pk"), col("vec_id"))
+        .limit(MaxProbes)
+        .as[(Long, String)]
+        .collect()
+        .map(_._1)
+        .sorted
+    }
 
   /** Probe-side membership filter — an `IN` over the bounded
     * [[probeIds]] set (≤ MaxProbes literals, pushable to the scan).
@@ -82,9 +77,6 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.dotF64(a, b)
 
-  private val vectorCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** (vec_id, v: array<double>, norm). Pre-computing the L2 norm once per
     * row keeps the per-pair work to a single dot product. Persisted
     * (MEMORY_AND_DISK) and memoized per (session, dir): every ANN/near-dup
@@ -94,32 +86,14 @@ object Similarity {
     * re-scanning + re-norming `embeddings` per reference.
     */
   private[pipeline] def vectors(spark: SparkSession, dir: String): DataFrame =
-    vectorCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        graft.functions.GraftFunctions.register(s)
-        graft.rel.Queries
-          .spread(table(s, d, "embeddings")
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
-          .withColumn("norm", sqrt(dot(col("v"), col("v"))))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-
-  /** Unpersists and forgets the session memos (vector frame, coarse
-    * centroids, PQ codebooks) — for long-lived services retiring a
-    * dataset directory; the next consumer rebuilds.
-    */
-  def clearShared(): Unit = {
-    vectorCache.forEach((_, df) => df.unpersist())
-    vectorCache.clear()
-    centroidCache.clear()
-    corpusCentroidCache.clear()
-    probeCache.clear()
-    pqCache.clear()
-    cellCache.forEach((_, df) => df.unpersist())
-    cellCache.clear()
-    momentCache.clear()
-  }
+    graft.Shared.session(spark, dir, "vectors") {
+      graft.functions.GraftFunctions.register(spark)
+      graft.rel.Queries
+        .spread(table(spark, dir, "embeddings")
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
+        .withColumn("norm", sqrt(dot(col("v"), col("v"))))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   private def scored(spark: SparkSession, dir: String): DataFrame = {
     val all = vectors(spark, dir)
@@ -295,9 +269,6 @@ object Similarity {
     */
   val VecDeltaMod = 10
 
-  private val centroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[(Long, Array[Double], Double)]]()
-
   /** Spark `round(_, 9)` / DuckDB `round(_, 9)` on the driver (BigDecimal
     * HALF_UP — the q110 precedent established the two agree), applied to
     * trained centroid coordinates so both engines see bit-identical
@@ -336,23 +307,17 @@ object Similarity {
     */
   private[pipeline] def coarseCentroids(
       spark: SparkSession, dir: String): Array[(Long, Array[Double], Double)] =
-    centroidCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) => trainCoarse(s, d, lit(true)) })
+    graft.Shared.session(spark, dir, "coarseCentroids")(trainCoarse(spark, dir, lit(true)))
 
   /** The SAME trainer over a filtered training population — used by the
     * index-maintenance family ([[annDeltaAssign]]/[[cellDrift]]), whose
     * standing codebook must be trained on the CORPUS ONLY (the delta
     * arrived after the index was built).
     */
-  private val corpusCentroidCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[(Long, Array[Double], Double)]]()
-
   private[pipeline] def corpusOnlyCentroids(
       spark: SparkSession, dir: String): Array[(Long, Array[Double], Double)] =
-    corpusCentroidCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) => trainCoarse(s, d, col("vec_id") % VecDeltaMod =!= 0) })
+    graft.Shared.session(spark, dir, "corpusOnlyCentroids")(
+      trainCoarse(spark, dir, col("vec_id") % VecDeltaMod =!= 0))
 
   private def trainCoarse(
       s: SparkSession, d: String,
@@ -615,16 +580,13 @@ object Similarity {
     * refinement, like q59) with a margin-robust same-algorithm model test
     * in PipelineSuite.
     */
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Array[Array[Double]]]]()
-
   /** Trained PQ codebooks, memoized per (session, dir) — [[pqCodes]] and
     * [[pqAnn]] share one training run, the way a production index shares
     * one codebook between its build and query paths.
     */
   private[pipeline] def pqTrain(
       spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent((spark, dir), { case (s, d) => computePqTrain(s, d) })
+    graft.Shared.session(spark, dir, "pqTrain")(computePqTrain(spark, dir))
 
   private def computePqTrain(
       spark: SparkSession, dir: String): Array[Array[Array[Double]]] = {
@@ -1002,9 +964,6 @@ object Similarity {
     */
   val SemDedupCosine = 0.4
 
-  private val cellCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Every vector tagged with its nearest coarse-centroid cell — the
     * shared front half of [[semanticDedup]] and [[clusterSample]]. One
     * narrow [[nearestCells]] kernel pass over the broadcast codebook: no
@@ -1016,21 +975,19 @@ object Similarity {
     * index asset built once per corpus, not per query.
     */
   private def cellTagged(spark: SparkSession, dir: String): DataFrame =
-    cellCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        import s.implicits._
-        val bcCoarse = s.sparkContext.broadcast(coarseCentroids(s, d))
-        vectors(s, d)
-          .select(col("vec_id"), col("v"), col("norm"))
-          .as[(Long, Array[Double], Double)]
-          .mapPartitions { it =>
-            val cc = bcCoarse.value
-            it.map { case (id, v, n) => (nearestCells(cc, v, n, 1)(0), id, v, n) }
-          }
-          .toDF("cent_id", "vec_id", "v", "norm")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    graft.Shared.session(spark, dir, "cellTagged") {
+      import spark.implicits._
+      val bcCoarse = spark.sparkContext.broadcast(coarseCentroids(spark, dir))
+      vectors(spark, dir)
+        .select(col("vec_id"), col("v"), col("norm"))
+        .as[(Long, Array[Double], Double)]
+        .mapPartitions { it =>
+          val cc = bcCoarse.value
+          it.map { case (id, v, n) => (nearestCells(cc, v, n, 1)(0), id, v, n) }
+        }
+        .toDF("cent_id", "vec_id", "v", "norm")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** L2/L3 — SEMANTIC dedup, the SemDeDup shape (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding corpus, then mark a vector
@@ -1362,9 +1319,6 @@ object Similarity {
   val EmbDim = 64
   val PcaK = 8
 
-  private val momentCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Array[Double], Array[Array[Double]])]()
-
   /** One distributed pass accumulating the corpus moment statistics:
     * count, per-dim sums, and upper-triangle cross-product sums. Per-task
     * state is dim + dim²/2 doubles (~16 KB at dim 64) REGARDLESS of
@@ -1377,7 +1331,7 @@ object Similarity {
     */
   private[pipeline] def momentStats(
       spark: SparkSession, dir: String): (Long, Array[Double], Array[Array[Double]]) =
-    momentCache.computeIfAbsent((spark, dir), { case (s, d2) => computeMomentStats(s, d2) })
+    graft.Shared.session(spark, dir, "momentStats")(computeMomentStats(spark, dir))
 
   private def computeMomentStats(
       spark: SparkSession, dir: String): (Long, Array[Double], Array[Array[Double]]) = {

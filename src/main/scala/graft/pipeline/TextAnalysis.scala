@@ -14,9 +14,6 @@ import graft.rel.Queries.table
   */
 object TextAnalysis {
 
-  private val tfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Per-(doc, term) counts over the corpus — (doc_id, source, term, tf) —
     * persisted (MEMORY_AND_DISK) and memoized per (session, dir): this is
     * the single most expensive text aggregation (tokenize + explode +
@@ -28,18 +25,13 @@ object TextAnalysis {
     * equivalent.
     */
   private def termFreq(spark: SparkSession, dir: String): DataFrame =
-    tfCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        graft.rel.Queries.spread(table(s, d, "documents").select(col("doc_id"), col("source"), col("text")))
-          .select(col("doc_id"), col("source"), explode(Shingles.tokens(col("text"))).as("term"))
-          .groupBy(col("doc_id"), col("source"), col("term"))
-          .agg(count(lit(1)).as("tf"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-
-  private val dlCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Double, Double)]()
+    graft.Shared.session(spark, dir, "termFreq") {
+      graft.rel.Queries.spread(table(spark, dir, "documents").select(col("doc_id"), col("source"), col("text")))
+        .select(col("doc_id"), col("source"), explode(Shingles.tokens(col("text"))).as("term"))
+        .groupBy(col("doc_id"), col("source"), col("term"))
+        .agg(count(lit(1)).as("tf"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Per-doc lengths (Σ tf — identical to size(tokens), see [[bm25]]) plus
     * the two corpus scalars (N, avgdl), derived from [[termFreq]] and
@@ -48,16 +40,14 @@ object TextAnalysis {
     * at 100 TB both come from table statistics, never per-query jobs.
     */
   private def docLengths(spark: SparkSession, dir: String): (DataFrame, Double, Double) =
-    dlCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        val dl = termFreq(s, d)
-          .groupBy(col("doc_id"))
-          .agg(sum(col("tf")).cast("double").as("dl"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val row = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).collect()(0)
-        (dl, row.getLong(0).toDouble, row.getDouble(1))
-      })
+    graft.Shared.session(spark, dir, "docLengths") {
+      val dl = termFreq(spark, dir)
+        .groupBy(col("doc_id"))
+        .agg(sum(col("tf")).cast("double").as("dl"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val row = dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")).collect()(0)
+      (dl, row.getLong(0).toDouble, row.getDouble(1))
+    }
 
   /** Eagerly builds + materializes the session-scoped shared artifacts
     * ([[termFreq]] postings, [[docLengths]], [[docBigrams]]). The 100 TB
@@ -75,35 +65,8 @@ object TextAnalysis {
     // standing assets of the same kind (built once per corpus, consumed
     // by every scoring run)
     dsirFeatures(spark, dir).count()
-    qcFeatures(spark, dir) // builds, persists and counts the frame
+    qcFeatures(spark, dir).count()
   }
-
-  /** Unpersists and forgets every session memo held by this object — the
-    * hook a long-lived service calls when a dataset directory is retired,
-    * so memoized frames (and their storage) don't pin retired plans for
-    * the life of the JVM. Safe to call between queries: the next consumer
-    * rebuilds the cache.
-    */
-  def clearShared(): Unit = {
-    tfCache.forEach((_, df) => df.unpersist())
-    tfCache.clear()
-    dlCache.forEach((_, v) => v._1.unpersist())
-    dlCache.clear()
-    bigramCache.forEach((_, df) => df.unpersist())
-    bigramCache.clear()
-    dsirCache.forEach((_, df) => df.unpersist())
-    dsirCache.clear()
-    qcCache.forEach((_, v) => v._1.unpersist())
-    qcCache.clear()
-    queryIdCache.clear()
-    bigramCountCache.forEach((_, v) => v._1.unpersist())
-    bigramCountCache.clear()
-    knCache.forEach((_, df) => df.unpersist())
-    knCache.clear()
-  }
-
-  private val dsirCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
 
   /** [[dsirSample]]'s hashed feature table — (doc_id, source, bkt, c):
     * per-document occurrence counts of unigram + bigram features hashed
@@ -115,24 +78,22 @@ object TextAnalysis {
     * ratio table, never the corpus).
     */
   private def dsirFeatures(spark: SparkSession, dir: String): DataFrame =
-    dsirCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        val docs = table(s, d, "documents").select(col("doc_id"), col("source"))
-        val uni = table(s, d, "documents")
-          .select(col("doc_id"), explode(Shingles.tokens(col("text"))).as("g"))
-        val bi = docBigrams(s, d)
-          .select(col("doc_id"), concat(col("w1"), lit(" "), col("w2")).as("g"))
-        uni.unionByName(bi)
-          .join(docs, "doc_id")
-          .select(
-            col("doc_id"),
-            col("source"),
-            substring(md5(concat(lit(DsirSalt), col("g"))), 1, 2).as("bkt"))
-          .groupBy(col("doc_id"), col("source"), col("bkt"))
-          .agg(count(lit(1)).as("c"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    graft.Shared.session(spark, dir, "dsirFeatures") {
+      val docs = table(spark, dir, "documents").select(col("doc_id"), col("source"))
+      val uni = table(spark, dir, "documents")
+        .select(col("doc_id"), explode(Shingles.tokens(col("text"))).as("g"))
+      val bi = docBigrams(spark, dir)
+        .select(col("doc_id"), concat(col("w1"), lit(" "), col("w2")).as("g"))
+      uni.unionByName(bi)
+        .join(docs, "doc_id")
+        .select(
+          col("doc_id"),
+          col("source"),
+          substring(md5(concat(lit(DsirSalt), col("g"))), 1, 2).as("bkt"))
+        .groupBy(col("doc_id"), col("source"), col("bkt"))
+        .agg(count(lit(1)).as("c"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** L4 — per-doc token statistics: token count, distinct count,
     * type-token ratio, mean token length. One narrow projection, no
@@ -799,9 +760,6 @@ object TextAnalysis {
       .orderBy(col("doc_id"), col("bin_id"))
   }
 
-  private val bigramCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** Per-doc (doc_id, w1, w2) adjacent-token bigrams — [[bigramKernel]]
     * with the document id carried through. Persisted + memoized per
     * (session, dir) like the shingle/vector frames: the bigram LM (q46),
@@ -811,18 +769,16 @@ object TextAnalysis {
     * lifetime (true of the driver's testdata).
     */
   private def docBigrams(spark: SparkSession, dir: String): DataFrame =
-    bigramCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        import s.implicits._
-        graft.rel.Queries.spread(table(s, d, "documents").select(col("doc_id"), col("text")))
-          .as[(Long, String)]
-          .mapPartitions(_.flatMap { case (id, t) =>
-            bigramKernel(t).map { case (a, b) => (id, a, b) }
-          })
-          .toDF("doc_id", "w1", "w2")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
+    graft.Shared.session(spark, dir, "docBigrams") {
+      import spark.implicits._
+      graft.rel.Queries.spread(table(spark, dir, "documents").select(col("doc_id"), col("text")))
+        .as[(Long, String)]
+        .mapPartitions(_.flatMap { case (id, t) =>
+          bigramKernel(t).map { case (a, b) => (id, a, b) }
+        })
+        .toDF("doc_id", "w1", "w2")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** L4 — repetition filters (the Gopher/RefinedWeb quality-rule family,
     * restated for single-line docs): duplicate-3-gram fraction
@@ -907,9 +863,6 @@ object TextAnalysis {
   def docLogProbKn(spark: SparkSession, dir: String): DataFrame =
     knScores(spark, dir).orderBy(col("doc_id"))
 
-  private val knCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
   /** The per-doc KN score frame (doc_id, n_bigrams, avg_logprob_kn),
     * persisted + memoized: it is a standing asset of the same kind as
     * [[bigramCounts]] — q118 emits it and q121's bucket gate reads it
@@ -917,30 +870,25 @@ object TextAnalysis {
     * the memo would re-run the whole LM join per reference.
     */
   private def knScores(spark: SparkSession, dir: String): DataFrame =
-    knCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        val bg = docBigrams(s, d)
-        val (c, nTypes) = bigramCounts(s, d)
-        val cw1 = c.groupBy(col("w1"))
-          .agg(sum(col("cnt")).as("tot"), count(lit(1)).as("n1plus"))
-        val cont = c.groupBy(col("w2")).agg(count(lit(1)).as("nc"))
-        val disc = KnDiscount
-        val lm = c.join(cw1, "w1").join(cont, "w2")
-          .select(
-            col("w1"), col("w2"),
-            (((col("cnt").cast("double") - lit(disc)) / col("tot"))
-              + (lit(disc) * col("n1plus") / col("tot")) * (col("nc") / lit(nTypes))).as("p"))
-        bg.join(lm, Seq("w1", "w2"))
-          .groupBy(col("doc_id"))
-          .agg(
-            count(lit(1)).as("n_bigrams"),
-            round(avg(log(col("p"))), 4).as("avg_logprob_kn"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      })
-
-  private val bigramCountCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, Double)]()
+    graft.Shared.session(spark, dir, "knScores") {
+      val bg = docBigrams(spark, dir)
+      val (c, nTypes) = bigramCounts(spark, dir)
+      val cw1 = c.groupBy(col("w1"))
+        .agg(sum(col("cnt")).as("tot"), count(lit(1)).as("n1plus"))
+      val cont = c.groupBy(col("w2")).agg(count(lit(1)).as("nc"))
+      val disc = KnDiscount
+      val lm = c.join(cw1, "w1").join(cont, "w2")
+        .select(
+          col("w1"), col("w2"),
+          (((col("cnt").cast("double") - lit(disc)) / col("tot"))
+            + (lit(disc) * col("n1plus") / col("tot")) * (col("nc") / lit(nTypes))).as("p"))
+      bg.join(lm, Seq("w1", "w2"))
+        .groupBy(col("doc_id"))
+        .agg(
+          count(lit(1)).as("n_bigrams"),
+          round(avg(log(col("p"))), 4).as("avg_logprob_kn"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Per-bigram corpus counts + the bigram-type total — the KN LM's
     * sufficient statistic. Persisted + memoized: [[docLogProbKn]] reads
@@ -948,15 +896,13 @@ object TextAnalysis {
     * and at scale the counted bigram table is the standing LM asset.
     */
   private def bigramCounts(spark: SparkSession, dir: String): (DataFrame, Double) =
-    bigramCountCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        val c = docBigrams(s, d)
-          .groupBy(col("w1"), col("w2"))
-          .agg(count(lit(1)).as("cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (c, c.count().toDouble)
-      })
+    graft.Shared.session(spark, dir, "bigramCounts") {
+      val c = docBigrams(spark, dir)
+        .groupBy(col("w1"), col("w2"))
+        .agg(count(lit(1)).as("cnt"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (c, c.count().toDouble)
+    }
 
   /** Train/val/test fractions, encoded as md5-prefix range gates:
     * lowercase-hex md5 is uniform, so `md5 < "e6"` selects 230/256 ≈ 90%
@@ -1234,44 +1180,28 @@ object TextAnalysis {
   val QcIters = 50
   val QcLr = 0.5
 
-  /** Rows per task for the [[trainLogReg]] gradient rounds — the point
-    * where a round's per-task arithmetic (a few flops × QcDim per row)
-    * stops being dwarfed by task scheduling. Sizes the loop's coalesce;
-    * see [[qualityClassifier]].
-    */
-  val QcRowsPerTask = 65536L
-
-  private val qcCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Long)]()
-
   /** (doc_id, y, x) — weak label (1.0 for [[Dedup.BenchSource]] docs) and
     * the feature vector [1, ln(1+tokens), stopword ratio, punct ratio,
-    * type-token ratio] — plus the frame's ROW COUNT, taken while the
-    * persist materializes (the count is what sizes the training loop's
-    * partitioning; caching it here keeps the loop itself job-free).
-    * Persisted + memoized: the training loop reads it [[QcIters]] times
-    * and scoring once more; 5 doubles per doc.
+    * type-token ratio]. Persisted + memoized: the training loop reads it
+    * [[QcIters]] times and scoring once more; 5 doubles per doc.
     */
-  private def qcFeatures(spark: SparkSession, dir: String): (DataFrame, Long) =
-    qcCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        val w = Shingles.tokens(col("text"))
-        val nTok = size(w)
-        val stopRatio =
-          size(filter(w, x => x.isin(Stopwords: _*))).cast("double") / nTok
-        val punctRatio = length(regexp_replace(col("text"), "[a-z ]", ""))
-          .cast("double") / greatest(length(col("text")), lit(1))
-        val ttr = size(array_distinct(w)).cast("double") / nTok
-        val df = graft.rel.Queries
-          .spread(table(s, d, "documents"))
-          .select(
-            col("doc_id"),
-            (col("source") === Dedup.BenchSource).cast("double").as("y"),
-            array(lit(1.0), log(lit(1) + nTok), stopRatio, punctRatio, ttr).as("x"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (df, df.count())
-      })
+  private def qcFeatures(spark: SparkSession, dir: String): DataFrame =
+    graft.Shared.session(spark, dir, "qcFeatures") {
+      val w = Shingles.tokens(col("text"))
+      val nTok = size(w)
+      val stopRatio =
+        size(filter(w, x => x.isin(Stopwords: _*))).cast("double") / nTok
+      val punctRatio = length(regexp_replace(col("text"), "[a-z ]", ""))
+        .cast("double") / greatest(length(col("text")), lit(1))
+      val ttr = size(array_distinct(w)).cast("double") / nTok
+      graft.rel.Queries
+        .spread(table(spark, dir, "documents"))
+        .select(
+          col("doc_id"),
+          (col("source") === Dedup.BenchSource).cast("double").as("y"),
+          array(lit(1.0), log(lit(1) + nTok), stopRatio, punctRatio, ttr).as("x"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** L4 — WEAK-SUPERVISION quality classifier, the CCNet/GPT-3 data-filter
     * pattern: positives = a trusted corpus (the [[Dedup.BenchSource]]
@@ -1289,21 +1219,8 @@ object TextAnalysis {
     */
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (feats, nRows) = qcFeatures(spark, dir)
-    val data = feats.select(col("y"), col("x")).as[(Double, Array[Double])]
-    // r18 (guide §1.2 per-task work vs fixed cost): the gradient pass is a
-    // few flops per row, so below ~QcRowsPerTask rows/task the QcIters
-    // sequential rounds are pure scheduling overhead — 50 rounds × 32
-    // near-empty tasks measured ~3× the 8-core runtime at sf0.1. Size the
-    // loop's partitioning from the (memoized) row count: ⌈n / rows-per-
-    // task⌉, never more than the input already has — at corpus scale the
-    // clamp keeps every input partition, locally the 500-row table trains
-    // in one task per round. coalesce() only narrows (no shuffle). The
-    // suite's reference-comparison slack covers the partial-sum
-    // FP-order change (PipelineSuite pins scores to 1.1e-4).
-    val parts = math.max(1L,
-      math.min(data.rdd.getNumPartitions.toLong, (nRows + QcRowsPerTask - 1) / QcRowsPerTask))
-    val wv = trainLogReg(data.rdd.coalesce(parts.toInt), spark)
+    val feats = qcFeatures(spark, dir)
+    val wv = trainLogReg(feats.select(col("y"), col("x")).as[(Double, Array[Double])].rdd, spark)
     val bw = spark.sparkContext.broadcast(wv)
     feats
       .select(col("doc_id"), col("y"), col("x"))
@@ -1384,31 +1301,26 @@ object TextAnalysis {
   val MaxQueries = 64
   val QueryCapSalt = "query-cap:"
 
-  private val queryIdCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Array[Long]]()
-
   /** The capped benchmark-query doc_id set — one TakeOrdered over the
     * bench source, memoized; MaxQueries longs on the driver regardless
     * of corpus size (the [[graft.pipeline.Similarity.probeIds]] twin for
     * the lexical/dense retrieval family).
     */
   private[pipeline] def benchQueryIds(spark: SparkSession, dir: String): Array[Long] =
-    queryIdCache.computeIfAbsent(
-      (spark, dir),
-      { case (s, d) =>
-        import s.implicits._
-        table(s, d, "documents")
-          .filter(col("source") === Dedup.BenchSource)
-          .select(col("doc_id"),
-            substring(md5(concat(lit(QueryCapSalt), col("doc_id").cast("string"))), 1, 12)
-              .as("qk"))
-          .orderBy(col("qk"), col("doc_id"))
-          .limit(MaxQueries)
-          .as[(Long, String)]
-          .collect()
-          .map(_._1)
-          .sorted
-      })
+    graft.Shared.session(spark, dir, "benchQueryIds") {
+      import spark.implicits._
+      table(spark, dir, "documents")
+        .filter(col("source") === Dedup.BenchSource)
+        .select(col("doc_id"),
+          substring(md5(concat(lit(QueryCapSalt), col("doc_id").cast("string"))), 1, 12)
+            .as("qk"))
+        .orderBy(col("qk"), col("doc_id"))
+        .limit(MaxQueries)
+        .as[(Long, String)]
+        .collect()
+        .map(_._1)
+        .sorted
+    }
 
   /** Query-side membership filter over the bounded [[benchQueryIds]]. */
   private[pipeline] def isBenchQuery(

@@ -99,21 +99,17 @@ object Formats {
       .orderBy(col("doc_id"))
   }
 
-  /** The struct-bearing parquet for [[nestedRoundtrip]], memoized per
-    * (session, sf dir): orders nested into two structs —
+  /** The struct-bearing parquet for [[nestedRoundtrip]], staged once per
+    * sf dir: orders nested into two structs —
     * `meta(cust_key, status)` and `amount(price, odate)` — written once
     * and re-read by both the declared query and the PlanSuite pruning
     * pin. The testdata tables are all flat, so without this source the
     * nested-schema-pruning path (a first-class behavior for real
     * log/event schemas, which are deeply nested) would stay ungated.
     */
-  private val nestedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   def nestedOrdersPath(spark: SparkSession, dir: String): String =
-    nestedCache.computeIfAbsent((spark, dir), { case (s, d) =>
-      val out = java.nio.file.Files.createTempDirectory("graft-nested").toString
-      s.read.parquet(s"$d/orders.parquet")
+    graft.Shared.staged(dir, "nested-orders") { out =>
+      spark.read.parquet(s"$dir/orders.parquet")
         .select(
           col("o_orderkey"),
           struct(
@@ -124,7 +120,7 @@ object Formats {
             col("o_orderdate").as("odate")).as("amount"))
         .write.mode(SaveMode.Overwrite).parquet(out)
       out
-    })
+    }
 
   /** Declared query (q155): nested-struct source + SCHEMA-PRUNED read.
     * Writes the struct-nested orders table, reads it back touching only

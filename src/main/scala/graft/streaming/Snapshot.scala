@@ -80,9 +80,9 @@ object Snapshot {
 
   /** Race-tolerant recursive delete (deleteIfExists per entry) — the
     * ONE copy of the walk/reverse-sort/delete idiom, shared with
-    * [[Events]].
+    * [[Events]] and [[graft.Shared]].
     */
-  private[streaming] def deleteRecursively(p: java.nio.file.Path): Unit =
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit =
     if (java.nio.file.Files.exists(p)) {
       val walk = java.nio.file.Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder())
