@@ -35,23 +35,19 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // r17 (guide §1.2 step 3, measured first): the generated-code
-      // compile cache is STATIC and defaults to 100 entries — this
-      // engine's 209-query suite holds thousands of distinct codegen
-      // units, so a round-robin pass evicted everything and re-Janino'd
-      // the whole suite every iteration (CodegenProbe, 86-query subset:
-      // pass 2 recompiled 1 803 of 2 230 units). Sized for a many-query
-      // analytics service, env-overridable; metaspace cost is bounded
-      // (generated classes are small) and irrelevant beside a 32g heap.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // r17 set spark.sql.streaming.checkpoint.fileChecksum.enabled=false
-      // HERE, process-wide — r18 (VERDICT r17 #7) moved that polarity to
-      // the checkpoint-creation sites (graft.streaming.Events.drainSession):
-      // ephemeral per-invocation drain checkpoints run without the Spark
-      // 4.1 checksum sidecars, while this factory keeps Spark's default
-      // (checksums ON), so a durable checkpoint built on it never silently
-      // loses corruption detection.
+      // r17 (measured first): the generated-code compile cache is STATIC
+      // and defaults to 100 entries — this engine's 209-query suite holds
+      // thousands of distinct codegen units, so a round-robin pass
+      // evicted everything and re-Janino'd the whole suite every
+      // iteration (r17 measurement, 86-query subset: pass 2 recompiled
+      // 1 803 of 2 230 units). Sized for a many-query analytics service;
+      // metaspace cost is bounded (generated classes are small) and
+      // irrelevant beside a 32g heap.
+      .config("spark.sql.codegen.cache.maxEntries", 8192)
+      // checkpoint checksums stay at Spark's default (ON) here: only the
+      // ephemeral drain checkpoints turn them off
+      // (graft.streaming.Events.streamSession), so a durable checkpoint
+      // built on this factory never silently loses corruption detection
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -18,8 +18,8 @@ import org.apache.spark.sql.types._
   * register words as individual aggregation-buffer COLUMNS — at the
   * stats-grade rsd = 0.01 that is 2 731 Long attributes PER SKETCH, so
   * q166's three-column stats row carried an 8 000+-field aggregation
-  * buffer through update, exchange, and merge. Measured (MicroProbe,
-  * committed): one rsd-0.01 sketch over 150 k rows costs ~0.95 s per
+  * buffer through update, exchange, and merge. Measured (r17
+  * measurement): one rsd-0.01 sketch over 150 k rows costs ~0.95 s per
   * pass vs ~0.33 s at rsd 0.05, and the q166 shape ~2.3 s steady-state —
   * with intermittent 60–290 s runs when the wide-buffer codegen/merge
   * interacts with host memory pressure. This form keeps the registers in

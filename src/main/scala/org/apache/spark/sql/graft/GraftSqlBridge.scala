@@ -29,7 +29,7 @@ object GraftSqlBridge {
     * letting them pile up makes the periodic maintenance sweep long
     * enough to stall whatever query is running when it fires —
     * measured as intermittent 2–5× wall-time spikes on back-to-back
-    * drains (graft.tools.DrainProbe nosleep). Only legal BETWEEN
+    * drains (r17 measurement, back-to-back runs). Only legal BETWEEN
     * streaming queries: an active query's providers would reload from
     * its checkpoint (correct, but a pointless perf hit).
     */

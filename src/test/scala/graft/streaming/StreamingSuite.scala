@@ -1359,4 +1359,47 @@ class StreamingSuite extends AnyFunSuite {
     assert(Events.latestViewVersion(viewRoot) == 3)
     assert(viewAt(3) == recomputeAt(3L), "serving version intact after gc")
   }
+
+  test("drain releases its query and memory-sink view when `after` throws") {
+    import spark.implicits._
+    val feed = Events.stageFeed("StreamingSuite", "drain-release-feed")(
+      Seq(Seq(1L, 2L, 2L).toDF("k")))
+    var child: org.apache.spark.sql.SparkSession = null
+    val e = intercept[IllegalStateException] {
+      Events.drain(spark) { ss =>
+        child = ss
+        Events.readFeed(ss, feed).groupBy(col("k")).count()
+          .writeStream.format("memory").queryName("drain_release_probe")
+          .outputMode("complete")
+      } { ss =>
+        assert(ss.table("drain_release_probe").count() == 2)
+        throw new IllegalStateException("after failed")
+      }
+    }
+    assert(e.getMessage == "after failed")
+    assert(child.streams.active.isEmpty && spark.streams.active.isEmpty)
+    assert(!child.catalog.tableExists("drain_release_probe"), "memory-sink view survived")
+    // the terminated-query record is forgotten too (it pins the sink)
+    assert(!child.streams.awaitAnyTermination(1))
+  }
+
+  test("stageFeed/readFeed drain delivers each staged file as one micro-batch, in order") {
+    import spark.implicits._
+    val sizes = Seq(3, 1, 2)
+    val feed = Events.stageFeed("StreamingSuite", "drain-order-feed")(
+      sizes.zipWithIndex.map { case (n, i) => Seq.fill(n)(i.toLong).toDF("file") })
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Seq[Long])]
+    Events.drain(spark) { ss =>
+      Events.readFeed(ss, feed).writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
+          seen.add((id, batch.collect().map(_.getLong(0)).toSeq))
+          ()
+        }
+    }(_ => ())
+    import scala.jdk.CollectionConverters._
+    // batch i = file i (mod-time order), carrying exactly its rows
+    assert(seen.asScala.toSeq == sizes.zipWithIndex.map { case (n, i) =>
+      (i.toLong, Seq.fill(n)(i.toLong))
+    })
+  }
 }
