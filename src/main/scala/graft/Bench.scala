@@ -23,7 +23,9 @@ import org.apache.spark.sql.SparkSession
   * count per query, and the metric line carries the total rejected count —
   * a headline that leaned on rejection is detectable, not hidden.
   * Per-run start offsets (seconds since bench start) are recorded so the
-  * spread of a query's samples across the wall-clock is auditable.
+  * spread of a query's samples across the wall-clock is auditable, and
+  * so is each run's count of generated classes compiled (`compiles`,
+  * parallel to `runs`): a warm run should compile 0.
   *
   * Interleaving + rejection still cannot catch a stall window covering
   * ALL of one query's samples (observed r10: adjacent full runs gave q73
@@ -94,6 +96,10 @@ object Bench {
     val benchT0 = System.nanoTime()
     final class QState(val name: String, val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame) {
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
+      // generated classes compiled during each run, parallel to `times`: a
+      // warm run that still compiles names a plan whose generated code
+      // misses the JVM-wide cache (a per-run source or class loader)
+      val compiles = scala.collection.mutable.ArrayBuffer.empty[Long]
       val starts = scala.collection.mutable.ArrayBuffer.empty[Double]
       var err: Option[String] = None
       // Host-stall outlier rejection: a run is an outlier when it exceeds
@@ -104,15 +110,21 @@ object Bench {
       def needsTopUp: Boolean = err.isEmpty && times.nonEmpty && kept.size < iters
     }
     val states = selected.map { case (n, f) => new QState(n, f) }
+    def compileCount: Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def runOnce(q: QState): Unit = {
       q.starts += (System.nanoTime() - benchT0) / 1e9
+      val c0 = compileCount
       val t0 = System.nanoTime()
       // noop sink, not count(): under count() Catalyst prunes every
       // projected expression and eliminates final sorts, so projection-
       // heavy queries would measure a bare scan instead of their work.
       try { q.fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
       catch { case e: Throwable => q.err = Some(s"${e.getClass.getSimpleName}: ${esc(String.valueOf(e.getMessage)).take(200)}") }
-      if (q.err.isEmpty) q.times += (System.nanoTime() - t0) / 1e9
+      if (q.err.isEmpty) {
+        q.times += (System.nanoTime() - t0) / 1e9
+        q.compiles += compileCount - c0
+      }
       // Old-gen churn from the finished run's shuffles shouldn't be billed
       // to the next query's first run (r5 pattern: later queries drifted up
       // as the run aged). Caches stay — clearing them would orphan memoized
@@ -167,6 +179,7 @@ object Bench {
         ",\"median_all\":" + fmt(median(ts.sorted.toSeq)) +
         ",\"rejected\":" + (ts.size - q.kept.size) +
         ",\"runs\":" + ts.map(fmt).mkString("[", ",", "]") +
+        ",\"compiles\":" + q.compiles.mkString("[", ",", "]") +
         ",\"start_sec\":" + q.starts.map(fmt).mkString("[", ",", "]") + "}"
     }.mkString("{", ",", "}")
     val errs = results.collect { case (q, _) if q.err.isDefined => "\"" + q.name + "\":\"" + q.err.get + "\"" }

@@ -35,15 +35,25 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // r17 (measured first): the generated-code compile cache is STATIC
-      // and defaults to 100 entries — this engine's 209-query suite holds
-      // thousands of distinct codegen units, so a round-robin pass
-      // evicted everything and re-Janino'd the whole suite every
-      // iteration (r17 measurement, 86-query subset: pass 2 recompiled
-      // 1 803 of 2 230 units). Sized for a many-query analytics service;
-      // metaspace cost is bounded (generated classes are small) and
-      // irrelevant beside a 32g heap.
+      // The generated-code compile cache is STATIC (one per JVM) and keyed
+      // by (class loader, source). r17 measured its default 100 entries
+      // evicting the suite on every round-robin pass (86-query subset:
+      // pass 2 recompiled 1 803 of 2 230 units); a 209-query pass compiles
+      // ~2.6k distinct units, hence 8192. Metaspace cost is bounded:
+      // generated classes are small.
       .config("spark.sql.codegen.cache.maxEntries", 8192)
+      // Artifact isolation off. With it on, every child session
+      // (`newSession()`: Engine.scopedSession per MR job,
+      // Events.streamSession per drain) got its own executor-side class
+      // loader, so the cache above missed on every class of its plan and
+      // Janino recompiled byte-identical sources, which then ran JIT-cold.
+      // Measured on 4 cores: a repeated word-count job recompiled 9 (spec
+      // path) or 17 (algebraic path) classes per call and q82 25 per
+      // drain; with isolation off all compile 0 once warm, and the
+      // perfbench wordcount pass median fell 2.45 -> 1.30 s. The engine
+      // adds no session artifacts (no addArtifact/addJar), so there is
+      // nothing to isolate.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // checkpoint checksums stay at Spark's default (ON) here: only the
       // ephemeral drain checkpoints turn them off
       // (graft.streaming.Events.streamSession), so a durable checkpoint

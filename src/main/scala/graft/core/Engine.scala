@@ -64,7 +64,10 @@ object Engine {
   /** `newSession()` starts from DEFAULT confs, which would silently drop
     * whatever the caller tuned at runtime (AQE flags, session timezone, …)
     * — so the caller's runtime SQL confs are copied over before the
-    * per-job override is applied. Read-only entries are skipped.
+    * per-job override is applied. Read-only entries are skipped. The
+    * child shares the parent's class loader (artifact isolation is off in
+    * [[graft.Sessions.local]]), so a repeated job reuses the parent's
+    * compiled and JIT-warmed generated code instead of recompiling it.
     */
   private def scopedSession(spark: SparkSession): SparkSession = {
     val scoped = spark.newSession()

@@ -87,7 +87,10 @@ object Events {
   /** Child session for one streaming query: the memory sink's view
     * registers in the CHILD catalog, so concurrent or repeated queries
     * never collide on a query name or read a replaced view, and the
-    * caller's session is never touched. Its confs:
+    * caller's session is never touched. It shares the caller's class
+    * loader (artifact isolation is off in [[graft.Sessions.local]]), so a
+    * repeated drain reuses the generated code compiled by the previous
+    * one instead of recompiling its whole plan. Its confs:
     *  - shuffle partitions lowered to [[StreamStatePartitions]] (state
     *    stores track shuffle partitions; see above);
     *  - the FileSystem-based checkpoint manager (r18, measured first by

@@ -150,6 +150,9 @@ class StreamingSuite extends AnyFunSuite {
     val batch = Events.tumblingBatch(spark, dir)
     assert(got.count() == batch.count())
     assert(got.exceptAll(batch).isEmpty && batch.exceptAll(got).isEmpty)
+    // each drain runs on a fresh child session: a repeated drain must
+    // reuse the code the first one compiled, not recompile its whole plan
+    assert(TestSpark.compilesDuring(Events.tumblingStreamFinal(spark, dir).collect()) == 0)
   }
 
   test("q86: streamed-append sliding windows finalize to exactly the batch windows") {
