@@ -14,7 +14,7 @@ class AlgebraicSuite extends AnyFunSuite {
 
   private def spec(out: String) = MapReduceSpec(
     nWorkers = 2, workerAddrs = Seq("a", "b"),
-    inputFiles = Seq("/root/reference/test/input1.txt", "/root/reference/test/input2.txt"),
+    inputFiles = MrFixture.inputs,
     outputDir = out, nOutputFiles = 10, mapKilobytes = 100, userId = "wc")
 
   test("algebraic word count == generic word count, with partial aggregation") {

@@ -6,17 +6,18 @@ import graft.TestSpark
 import graft.jobs.WordCount
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Golden end-to-end test of SURVEY.md §7.2: word count over the reference's
-  * own fixtures with the reference's output contract (R files `output_<i>`,
-  * per-file key-sorted, disjoint keys, correct totals). The oracle is an
+/** Golden end-to-end test of SURVEY.md §7.2: word count with the reference's
+  * output contract (R files `output_<i>`, per-file key-sorted, disjoint keys,
+  * correct totals). The corpus is [[MrFixture.inputs]], a seeded stand-in for
+  * the reference's Alice files with their size and delimiter set (FIXTURES.md
+  * §A.2), so the tests cut as many shards as they would. The oracle is an
   * independently computed in-memory frequency table with *intended*
   * semantics (SURVEY.md §2.5 — the reference binary itself has a
   * value-corruption bug we must not replicate).
   */
 class EngineWordCountSuite extends AnyFunSuite {
 
-  private val inputs =
-    Seq("/root/reference/test/input1.txt", "/root/reference/test/input2.txt")
+  private def inputs = MrFixture.inputs
 
   private def goldenCounts(): Map[String, Long] = {
     val counts = scala.collection.mutable.HashMap.empty[String, Long]
@@ -80,6 +81,15 @@ class EngineWordCountSuite extends AnyFunSuite {
     assert(got.size == golden.size, s"key count ${got.size} != golden ${golden.size}")
     assert(got == golden)
     Registry.clear()
+  }
+
+  test("the seeded corpus has §A.2's size and uses every tokenizer delimiter") {
+    inputs.foreach { f =>
+      val text = Files.readString(Paths.get(f))
+      assert(math.abs(text.length - MrFixture.InputBytes) <= MrFixture.InputBytes / 100, f)
+      // each delimiter of [ ,."']+, an in-word apostrophe and a blank line
+      Seq(" ", ",", ".", "\"", "'", "n't", "\n\n").foreach(d => assert(text.contains(d), s"$f lacks [$d]"))
+    }
   }
 
   test("engine result is invariant to shard size and R (partitioning contract only)") {

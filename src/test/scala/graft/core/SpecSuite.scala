@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class SpecSuite extends AnyFunSuite {
 
   test("F1: parses the reference config.ini dialect") {
-    val spec = MapReduceSpec.fromConfigFile("/root/reference/test/config.ini")
+    val spec = MapReduceSpec.fromConfigFile(MrFixture.config)
     assert(spec.nWorkers == 5)
     assert(spec.workerAddrs == Seq(
       "localhost:50051", "localhost:50052", "localhost:50053",
@@ -20,7 +20,7 @@ class SpecSuite extends AnyFunSuite {
   }
 
   test("F2: validation flags missing input files (the reference config's inputs don't ship)") {
-    val spec = MapReduceSpec.fromConfigFile("/root/reference/test/config.ini")
+    val spec = MapReduceSpec.fromConfigFile(MrFixture.config)
     val errs = MapReduceSpec.validate(spec)
     assert(errs.exists(_.contains("not readable")))
   }
@@ -29,7 +29,7 @@ class SpecSuite extends AnyFunSuite {
     val spec = MapReduceSpec(
       nWorkers = 2,
       workerAddrs = Seq("localhost:1", "localhost:2"),
-      inputFiles = Seq("/root/reference/test/input1.txt", "/root/reference/test/input2.txt"),
+      inputFiles = MrFixture.inputs,
       outputDir = Files.createTempDirectory("graft-out").toString,
       nOutputFiles = 10,
       mapKilobytes = 10,

@@ -80,7 +80,7 @@ class PlanSuite extends AnyFunSuite {
     import graft.core._
     val spec = MapReduceSpec(
       nWorkers = 2, workerAddrs = Seq("a", "b"),
-      inputFiles = Seq("/root/reference/test/input1.txt"),
+      inputFiles = Seq(MrFixture.inputs.head),
       outputDir = "/tmp/plansuite-unused", nOutputFiles = 4,
       mapKilobytes = 100, userId = "wc")
     val p = plan(Engine.transform(spark, spec, graft.jobs.WordCount).toDF)
