@@ -47,18 +47,23 @@ object Engine {
   /** The pure dataflow (separated from the sink so tests can inspect it).
     * Result has exactly `spec.nOutputFiles` partitions, each sorted by key.
     */
-  def transform(spark: SparkSession, spec: MapReduceSpec, job: MrJob): Dataset[(String, String)] = {
-    // F3: split size. The reference shards at map_kilobytes*1000 bytes,
-    // newline-aligned (`src/file_shard.h:64,93,110` — *1000, not 1024);
-    // Spark's FileSourceScanExec does the same line-aligned byte-range split.
-    // The override lives on a scoped session (same SparkContext, private
-    // SQLConf): FilePartition.maxSplitBytes re-reads the plan's session conf
-    // at RDD build, so mutating the caller's shared session would both leak
-    // the setting past this job and race two concurrent jobs with different
-    // map_kilobytes.
+  def transform(spark: SparkSession, spec: MapReduceSpec, job: MrJob): Dataset[(String, String)] =
+    transformLines(scan(spark, spec), job, spec.nOutputFiles)
+
+  /** F3+F4: the spec's input lines, split at `map_kilobytes`. The reference
+    * shards at map_kilobytes*1000 bytes, newline-aligned
+    * (`src/file_shard.h:64,93,110` — *1000, not 1024); Spark's
+    * FileSourceScanExec does the same line-aligned byte-range split. The
+    * override lives on a scoped session (same SparkContext, private
+    * SQLConf): FilePartition.maxSplitBytes re-reads the plan's session conf
+    * at RDD build, so mutating the caller's shared session would both leak
+    * the setting past this job and race two concurrent jobs with different
+    * map_kilobytes.
+    */
+  private def scan(spark: SparkSession, spec: MapReduceSpec): Dataset[String] = {
     val scoped = scopedSession(spark)
     scoped.conf.set("spark.sql.files.maxPartitionBytes", spec.mapKilobytes * 1000L)
-    transformLines(scoped.read.textFile(spec.inputFiles: _*), job, spec.nOutputFiles)
+    scoped.read.textFile(spec.inputFiles: _*)
   }
 
   /** `newSession()` starts from DEFAULT confs, which would silently drop
@@ -85,21 +90,11 @@ object Engine {
   def transformLines(lines: Dataset[String], job: MrJob, nOutputFiles: Int): Dataset[(String, String)] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    // F5+F6: per-record user map through a buffering emitter. One emitter per
-    // partition (reset per record by drain) keeps allocation off the hot path.
-    val mapped = lines.mapPartitions { it =>
-      val e = new BufferingEmitter
-      it.flatMap { line =>
-        job.map(line, e)
-        e.drain()
-      }
-    }
-
     // F7: hash partition into R. F8+F10: group + reduce. The groupBy's
     // required ClusteredDistribution(key) is already satisfied by the
     // repartition, so Catalyst inserts only a per-partition sort — one
     // shuffle total for the whole job.
-    mapped
+    mapStage(lines, job.map)
       .toDF("key", "value")
       .repartition(nOutputFiles, col("key"))
       .groupBy(col("key"))
@@ -127,14 +122,8 @@ object Engine {
   def transformAlgebraic[B](
       spark: SparkSession,
       spec: MapReduceSpec,
-      job: AlgebraicJob[B]): Dataset[(String, String)] = {
-    // Same scoped-session rationale as [[transform]]: never mutate the
-    // caller's shared conf for a per-job split-size override.
-    val scoped = scopedSession(spark)
-    scoped.conf.set("spark.sql.files.maxPartitionBytes", spec.mapKilobytes * 1000L)
-    transformLinesAlgebraic(
-      scoped.read.textFile(spec.inputFiles: _*), job, spec.nOutputFiles)
-  }
+      job: AlgebraicJob[B]): Dataset[(String, String)] =
+    transformLinesAlgebraic(scan(spark, spec), job, spec.nOutputFiles)
 
   /** The algebraic dataflow over an arbitrary line Dataset — the
     * [[transformLines]] twin for [[AlgebraicJob]]s, so any corpus column
@@ -146,19 +135,29 @@ object Engine {
       nOutputFiles: Int): Dataset[(String, String)] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    val mapped = lines.mapPartitions { it =>
-      val e = new BufferingEmitter
-      it.flatMap { line =>
-        job.map(line, e)
-        e.drain()
-      }
-    }
-    mapped
+    mapStage(lines, job.map)
       .groupByKey(_._1)
       .agg(AlgebraicJob.aggregator(job).toColumn.name("value"))
       .repartition(nOutputFiles, col("key"))
       .sortWithinPartitions("key")
       .as[(String, String)]
+  }
+
+  /** F5+F6: per-record user map through a buffering emitter. One emitter per
+    * partition (reset per record by drain) keeps allocation off the hot path.
+    */
+  private def mapStage(
+      lines: Dataset[String],
+      map: (String, Emitter) => Unit): Dataset[(String, String)] = {
+    val spark = lines.sparkSession
+    import spark.implicits._
+    lines.mapPartitions { it =>
+      val e = new BufferingEmitter
+      it.flatMap { line =>
+        map(line, e)
+        e.drain()
+      }
+    }
   }
 
   def runJobAlgebraic[B](spark: SparkSession, spec: MapReduceSpec, job: AlgebraicJob[B]): Int = {

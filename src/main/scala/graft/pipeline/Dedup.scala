@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 
 import graft.rel.Queries.table
@@ -36,11 +39,12 @@ object Dedup {
   val JaccardThreshold = 0.5
 
   /** Distinct word-3-gram shingles, computed in a typed kernel. Same
-    * semantics as [[Shingles.shingles]] (and the DuckDB oracle CTE), but
-    * ~10× faster: Spark's higher-order array functions (`transform`,
-    * `array_join`, …) are CodegenFallback — interpreted per element — so
-    * a hot shingling path pays tree-walk + boxing per shingle. A plain
-    * Scala loop is JIT-compiled.
+    * semantics as the DuckDB oracle's shingle CTE
+    * (`list_distinct(list_transform(range(1, greatest(len(w)-1, 1)),
+    * i -> array_to_string(w[i:i+2], ' ')))`), but as a plain Scala loop:
+    * Spark's higher-order array functions (`transform`, `array_join`, …)
+    * are CodegenFallback — interpreted per element — so an expression
+    * shingler pays tree-walk + boxing per shingle, ~10× the JIT'd loop.
     */
   def shingleKernel(text: String): Array[String] = ngramKernel(text, 3)
 
@@ -78,7 +82,7 @@ object Dedup {
     * instead of re-computing the upstream pipeline for both join sides,
     * and a JIT'd loop instead of interpreted nested-`transform` lambdas.
     */
-  private[pipeline] def expandPairs[T, R](sorted: Array[T])(f: (T, T) => R): Seq[R] = {
+  private def expandPairs[T, R](sorted: Array[T])(f: (T, T) => R): Seq[R] = {
     val out = new scala.collection.mutable.ArrayBuffer[R](
       sorted.length * (sorted.length - 1) / 2)
     var i = 0
@@ -88,6 +92,98 @@ object Dedup {
       i += 1
     }
     out.toSeq
+  }
+
+  /** Posting lists: one row per distinct `keys` value, holding the
+    * `member` values of its rows as `ids` — the group-by-key step of every
+    * near-dup candidate generator. Several member columns are collected as
+    * one tuple `V` (fields `_1`, `_2`, …). With `cap = Some(c)`, lists
+    * longer than `c` are dropped, and the bounded collect keeps each
+    * group's aggregation buffer at O(c): a boilerplate shingle in 10^6
+    * documents never materializes its list. With `None` every list is
+    * kept whole (`collect_list`).
+    */
+  private[graft] def postings[V: TypeTag](
+      rows: DataFrame,
+      keys: Seq[Column],
+      member: Seq[Column],
+      cap: Option[Int]): DataFrame = cap match {
+    case None =>
+      val m =
+        if (member.size == 1) member.head
+        else struct(member.zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }: _*)
+      rows.groupBy(keys: _*).agg(collect_list(m).as("ids"))
+    case Some(c) =>
+      val bounded = udaf(new graft.rel.TopK.BoundedCollectAgg[V](c), ExpressionEncoder[V]())
+      rows.groupBy(keys: _*).agg(bounded(member: _*).as("ids"))
+        .filter(size(col("ids")) <= c)
+  }
+
+  /** In-bucket pairs of [[postings]]: every list of 2+ members is sorted
+    * (members are unique per list, so a tuple member sorts by its id) and
+    * expanded by [[expandPairs]] into `f(smaller, larger)` rows.
+    */
+  private[pipeline] def bucketPairs[V: TypeTag: Ordering, R: TypeTag](
+      rows: DataFrame,
+      keys: Seq[Column],
+      member: Seq[Column],
+      cap: Option[Int])(f: (V, V) => R): Dataset[R] =
+    postings[V](rows, keys, member, cap)
+      .filter(size(col("ids")) > 1)
+      .select(col("ids"))
+      .as(ExpressionEncoder[Array[V]]())
+      .flatMap(ids => expandPairs(ids.sorted)(f))(ExpressionEncoder[R]())
+
+  /** (doc_id, n_sh, s): one row per (document, shingle). */
+  private def exploded(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
+
+  /** Ordered document pairs sharing a shingle of a (doc_id, n_sh, s)
+    * frame: one (d1, d2, n1, n2) row per co-occurrence, lists above `cap`
+    * dropped.
+    */
+  private def expandCoOccurrences(rows: DataFrame, cap: Option[Int]): DataFrame =
+    bucketPairs[(Long, Int), (Long, Long, Int, Int)](
+      rows, Seq(col("s")), Seq(col("doc_id"), col("n_sh")), cap) {
+      case ((d1, n1), (d2, n2)) => (d1, d2, n1, n2)
+    }.toDF("d1", "d2", "n1", "n2")
+
+  /** Shared common-shingle counts of every co-occurring pair:
+    * (d1, d2, n1, n2, common) from one row per shared shingle.
+    */
+  private def commonCounts(pairs: DataFrame): DataFrame =
+    pairs.groupBy(col("d1"), col("d2"), col("n1"), col("n2")).agg(count(lit(1)).as("common"))
+
+  /** Inverted-index counts of [[ngramJaccard]] (cap = None) and
+    * [[ngramJaccardCapped]] (cap = Some(n)): (d1, d2, n1, n2, common) for
+    * every pair sharing a shingle. With a cap, `common` is a LOWER bound
+    * on the true count (contributions of dropped hot shingles are
+    * missing).
+    */
+  private def pairCommonCounts(docs: DataFrame, cap: Option[Int]): DataFrame =
+    commonCounts(expandCoOccurrences(exploded(docs), cap))
+
+  /** The two finishes of a common-count flow. Exact counts (cap = None)
+    * give exact jaccard directly. Capped counts are lower bounds (jaccard
+    * is monotone in `common`), so the pairs clearing the threshold on
+    * them are a candidate superset of the capped answer; only those few
+    * survivors are exact-verified on the full shingle sets
+    * ([[verifyCandidates]]), so every emitted score is exact.
+    */
+  private def jaccardPairs(spark: SparkSession, dir: String, cap: Option[Int])(
+      counts: (DataFrame, Option[Int]) => DataFrame): DataFrame = {
+    val docs = docShingles(spark, dir)
+    val common = counts(docs, cap)
+    val jaccard = col("common") / (col("n1") + col("n2") - col("common"))
+    if (cap.isEmpty)
+      common
+        .withColumn("jaccard", jaccard)
+        .filter(col("jaccard") >= JaccardThreshold)
+        .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
+        .orderBy(col("d1"), col("d2"))
+    else
+      verifyCandidates(
+        docs, common.filter(jaccard >= JaccardThreshold).select(col("d1"), col("d2")))
   }
 
   /** L2 exact — n-gram Jaccard near-dup pairs via inverted index: explode
@@ -100,67 +196,8 @@ object Dedup {
     * scale path: it drops hot postings lists from candidate generation
     * (recall traded, scores still exact via full-set verification).
     */
-  /** Shared inverted-index flow of [[ngramJaccard]] (cap = None) and
-    * [[ngramJaccardCapped]] (cap = Some(n)): explode shingles → postings
-    * per shingle → optionally drop postings lists above the cap → expand
-    * in-bucket pairs → count common shingles per pair. Returns
-    * (d1, d2, n1, n2, common); with a cap, `common` is a LOWER bound on
-    * the true count (contributions of dropped hot shingles are missing).
-    */
-  /** Postings → in-bucket pair expansion, shared by every inverted-index
-    * variant: group a (doc_id, n_sh, s) frame into per-shingle postings,
-    * optionally drop lists above `cap`, and expand each into its ordered
-    * document pairs. Returns one (d1, d2, n1, n2) row per co-occurrence.
-    */
-  private def expandCoOccurrences(
-      spark: SparkSession,
-      rows: DataFrame,
-      cap: Option[Int]): DataFrame = {
-    import spark.implicits._
-    cap match {
-      case None =>
-        rows
-          .groupBy(col("s"))
-          .agg(collect_list(struct(col("doc_id").as("_1"), col("n_sh").as("_2"))).as("ids"))
-          .filter(size(col("ids")) > 1)
-          .select(col("ids"))
-          .as[Array[(Long, Int)]]
-          .flatMap(ids =>
-            expandPairs(ids.sortBy(_._1)) { case ((d1, n1), (d2, n2)) => (d1, d2, n1, n2) })
-          .toDF("d1", "d2", "n1", "n2")
-      case Some(c) =>
-        // bounded-buffer collect: a hot shingle's aggregation state is
-        // O(cap), not O(postings) — identical output (kept lists fit
-        // entirely; cap+1-length groups are exactly the size-filter drops)
-        rows
-          .select(col("s"), col("doc_id"), col("n_sh"))
-          .as[(String, Long, Int)]
-          .groupByKey(_._1)
-          .mapValues(t => (t._2, t._3))
-          .agg(new graft.rel.TopK.BoundedCollectAgg[(Long, Int)](c).toColumn.name("ids"))
-          .flatMap { case (_, ids) =>
-            if (ids.lengthCompare(1) > 0 && ids.lengthCompare(c) <= 0)
-              expandPairs(ids.sortBy(_._1).toArray) {
-                case ((d1, n1), (d2, n2)) => (d1, d2, n1, n2)
-              }
-            else Seq.empty
-          }
-          .toDF("d1", "d2", "n1", "n2")
-    }
-  }
-
-  private def pairCommonCounts(spark: SparkSession, docs: DataFrame, cap: Option[Int]): DataFrame =
-    expandCoOccurrences(
-      spark, docs.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s")), cap)
-      .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
-      .agg(count(lit(1)).as("common"))
-
   def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
-    pairCommonCounts(spark, docShingles(spark, dir), None)
-      .withColumn("jaccard", col("common") / (col("n1") + col("n2") - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("d1"), col("d2"))
+    jaccardPairs(spark, dir, None)(pairCommonCounts)
 
   /** Postings-list size cap for [[ngramJaccardCapped]]: shingles shared by
     * more than this many documents are dropped from CANDIDATE GENERATION
@@ -174,12 +211,6 @@ object Dedup {
     */
   val MaxPostings = 64
 
-  /** Exact-verify a candidate pair set against the full shingle sets:
-    * jaccard = |∩| / |∪| via `array_intersect`, thresholded. Only the
-    * (small) candidate set rejoins the shingle frame — shared by
-    * [[minhashLsh]] and [[ngramJaccardCapped]], whose emitted scores are
-    * therefore exact even though their candidate generation is pruned.
-    */
   /** Exact re-verification of (d1, d2) candidate pairs against the full
     * shingle sets — the second stage every capped/bucketed candidate
     * generator composes with ([[ngramJaccardCapped]], [[deltaDedupCapped]],
@@ -194,6 +225,12 @@ object Dedup {
       spark: SparkSession, dir: String, candidates: DataFrame): DataFrame =
     verifyCandidates(docShingles(spark, dir), candidates)
 
+  /** Exact-verify a candidate pair set against the full shingle sets:
+    * jaccard = |∩| / |∪| via `array_intersect`, thresholded. Only the
+    * (small) candidate set rejoins the shingle frame, so the emitted
+    * scores of every pruned candidate generator ([[minhashLsh]], the
+    * capped and prefix-filtered variants) are exact.
+    */
   private def verifyCandidates(
       docs: DataFrame,
       candidates: DataFrame,
@@ -231,16 +268,8 @@ object Dedup {
     * must stay count-based; only the threshold survivors (near-dups are
     * rare) ever touch the full shingle arrays.
     */
-  def ngramJaccardCapped(spark: SparkSession, dir: String): DataFrame = {
-    val docs = docShingles(spark, dir)
-    val survivors = pairCommonCounts(spark, docs, Some(MaxPostings))
-      // capped common ≤ true common → this jaccard is a lower bound; the
-      // threshold here is final for recall (missed = hot-shingle-only
-      // similarity) but scores are re-derived exactly below
-      .filter(col("common") / (col("n1") + col("n2") - col("common")) >= JaccardThreshold)
-      .select(col("d1"), col("d2"))
-    verifyCandidates(docs, survivors)
-  }
+  def ngramJaccardCapped(spark: SparkSession, dir: String): DataFrame =
+    jaccardPairs(spark, dir, Some(MaxPostings))(pairCommonCounts)
 
   /** Threshold for the prefix-filtered high-similarity variant. Prefix
     * filtering's candidate pruning scales with the threshold (prefix
@@ -250,6 +279,20 @@ object Dedup {
     * production dedup runs use.
     */
   val PrefixJaccardThreshold = 0.8
+
+  /** (doc_id, n_sh, s, freq) from ONE shingle-keyed aggregation: the
+    * posting and its length (= the shingle's global document frequency)
+    * come out of the same shuffle — a separate `groupBy(s).count` +
+    * re-join of the exploded frame would pay a second full shuffle of
+    * the token-scale data for the same information. Shared by the
+    * prefix-filter ranking ([[ngramJaccardPrefix]]) and the novelty
+    * scorer ([[ngramNovelty]]), which must agree on what "document
+    * frequency" means.
+    */
+  private def withGlobalFreq(docs: DataFrame): DataFrame =
+    postings[(Long, Int)](exploded(docs), Seq(col("s")), Seq(col("doc_id"), col("n_sh")), None)
+      .select(col("s"), size(col("ids")).as("freq"), explode(col("ids")).as("d"))
+      .select(col("d._1").as("doc_id"), col("d._2").as("n_sh"), col("s"), col("freq"))
 
   /** L2 exact at scale — prefix-filtered Jaccard self-join at
     * [[PrefixJaccardThreshold]]: EXACT result with GUARANTEED recall
@@ -267,26 +310,10 @@ object Dedup {
     * bounded by shingles-per-document (document length), never by corpus
     * size.
     */
-  /** (doc_id, n_sh, s, freq) from ONE shingle-keyed aggregation: the
-    * posting and its length (= the shingle's global document frequency)
-    * come out of the same shuffle — a separate `groupBy(s).count` +
-    * re-join of the exploded frame would pay a second full shuffle of
-    * the token-scale data for the same information. Shared by the
-    * prefix-filter ranking ([[ngramJaccardPrefix]]) and the novelty
-    * scorer ([[ngramNovelty]]), which must agree on what "document
-    * frequency" means.
-    */
-  private def withGlobalFreq(ex: DataFrame): DataFrame =
-    ex.groupBy(col("s"))
-      .agg(collect_list(struct(col("doc_id"), col("n_sh"))).as("ids"))
-      .select(col("s"), size(col("ids")).as("freq"), explode(col("ids")).as("d"))
-      .select(col("d.doc_id").as("doc_id"), col("d.n_sh").as("n_sh"), col("s"), col("freq"))
-
   def ngramJaccardPrefix(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = docShingles(spark, dir)
-    val ex = docs.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-    val withFreq = withGlobalFreq(ex)
+    val withFreq = withGlobalFreq(docs)
     // Per-doc prefix selection as a doc-grouped JIT'd kernel: sort the
     // doc's shingles by (freq asc, shingle asc) locally and keep the
     // first n_sh − ⌈t·n_sh⌉ + 1 — replacing a `row_number` window whose
@@ -306,7 +333,7 @@ object Dedup {
           .iterator.take(plen).map(t => (doc, nSh, t._3))
       }
       .toDF("doc_id", "n_sh", "s")
-    val candidates = expandCoOccurrences(spark, prefixRows, None)
+    val candidates = expandCoOccurrences(prefixRows, None)
       // length filter (exact, standard companion of prefix filtering):
       // J ≥ t ⇒ |∩| ≥ t·|∪| ⇒ min(n1,n2) ≥ t·max(n1,n2) — size-mismatched
       // pairs can be dropped before the verify join ever sees them
@@ -372,7 +399,7 @@ object Dedup {
         out.iterator
       })
       .toDF("doc_id", "h1", "h2")
-    sharedWindowPairCounts(spark, wins, None, "n_windows")
+    sharedWindowPairCounts(wins, None, "n_windows")
   }
 
   /** Inverted-index tail shared by [[substringDup]] and
@@ -389,41 +416,15 @@ object Dedup {
     * still real (⊆-exact).
     */
   private[pipeline] def sharedWindowPairCounts(
-      spark: SparkSession,
       wins: DataFrame,
       cap: Option[Int],
-      outCol: String): DataFrame = {
-    import spark.implicits._
-    val pairs = cap match {
-      case None =>
-        wins
-          .groupBy(col("h1"), col("h2"))
-          .agg(collect_list(col("doc_id")).as("ids"))
-          .filter(size(col("ids")) > 1)
-          .select(col("ids"))
-          .as[Array[Long]]
-          .flatMap(ids => expandPairs(ids.sorted)((a, b) => (a, b)))
-      case Some(c) =>
-        // bounded-buffer collect (see expandCoOccurrences): hot
-        // fingerprints never materialize their full posting list
-        wins
-          .select(col("h1"), col("h2"), col("doc_id"))
-          .as[(Long, Long, Long)]
-          .groupByKey(t => (t._1, t._2))
-          .mapValues(_._3)
-          .agg(new graft.rel.TopK.BoundedCollectAgg[Long](c).toColumn.name("ids"))
-          .flatMap { case (_, ids) =>
-            if (ids.lengthCompare(1) > 0 && ids.lengthCompare(c) <= 0)
-              expandPairs(ids.sorted.toArray)((a, b) => (a, b))
-            else Seq.empty
-          }
-    }
-    pairs
+      outCol: String): DataFrame =
+    bucketPairs[Long, (Long, Long)](wins, Seq(col("h1"), col("h2")), Seq(col("doc_id")), cap)(
+      (a, b) => (a, b))
       .toDF("d1", "d2")
       .groupBy(col("d1"), col("d2"))
       .agg(count(lit(1)).as(outCol))
       .orderBy(col("d1"), col("d2"))
-  }
 
   /** Winnowing block width for [[substringDupWinnowed]]: every block of
     * this many CONSECUTIVE window hashes contributes its minimum to the
@@ -467,7 +468,7 @@ object Dedup {
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, t) => winnowKernel(t, w).map { case (a, b) => (id, a, b) } })
       .toDF("doc_id", "h1", "h2")
-    sharedWindowPairCounts(spark, wins, Some(MaxPostings), "n_anchors")
+    sharedWindowPairCounts(wins, Some(MaxPostings), "n_anchors")
   }
 
   /** Per-position 128-bit window hashes — (h1, h2) arrays, one entry per
@@ -572,23 +573,24 @@ object Dedup {
     * 100 TB it would be a reliable checkpoint every few rounds — same
     * structure). The driver sees only a per-round change COUNT, never
     * data rows. Canonical = min doc_id of the component, matching
-    * [[exactDedup]].
-    */
-  /** Memoized per (session, dir): the converged label frame stays
-    * persisted (it IS the result), so without the memo every invocation
-    * would leak one cached frame; with it, repeated calls share the one.
+    * [[exactDedup]]. Memoized per (session, dir): the converged label
+    * frame stays persisted (it IS the result), so without the memo every
+    * invocation would leak one cached frame; with it, repeated calls
+    * share the one.
     */
   def dedupGroups(spark: SparkSession, dir: String): DataFrame =
-    graft.Shared.session(spark, dir, "dedupGroups")(computeDedupGroups(spark, dir))
+    graft.Shared.session(spark, dir, "dedupGroups")(groupsOf(ngramJaccard(spark, dir)))
 
-  private def computeDedupGroups(spark: SparkSession, dir: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // pairs persisted: the symmetric edge union references it twice, and
-    // without the cache each branch would re-run the whole candidate
-    // pipeline.
-    val pairs = ngramJaccard(spark, dir).select(col("d1"), col("d2")).persist(lvl)
-    val (labels, _) = propagateLabels(pairs)
-    pairs.unpersist()
+  /** (doc_id, canonical_id) components of a (d1, d2, …) pair graph. The
+    * pairs are persisted while labels propagate: the symmetric edge union
+    * references them twice, and without the cache each branch would
+    * re-run the whole candidate pipeline.
+    */
+  private def groupsOf(pairs: DataFrame): DataFrame = {
+    val edges = pairs.select(col("d1"), col("d2"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (labels, _) = propagateLabels(edges)
+    edges.unpersist()
     labels
       .select(col("node").as("doc_id"), col("lbl").as("canonical_id"))
       .orderBy(col("doc_id"))
@@ -609,15 +611,8 @@ object Dedup {
     * PipelineSuite asserts the containment invariant and ≥0.9 recall of
     * grouped docs vs [[dedupGroups]].
     */
-  def dedupGroupsLsh(spark: SparkSession, dir: String): DataFrame = {
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val pairs = minhashLsh(spark, dir).select(col("d1"), col("d2")).persist(lvl)
-    val (labels, _) = propagateLabels(pairs)
-    pairs.unpersist()
-    labels
-      .select(col("node").as("doc_id"), col("lbl").as("canonical_id"))
-      .orderBy(col("doc_id"))
-  }
+  def dedupGroupsLsh(spark: SparkSession, dir: String): DataFrame =
+    groupsOf(minhashLsh(spark, dir))
 
   /** L2/L5 — dedup-group SIZE HISTOGRAM: how many clusters of each size
     * the near-dup graph contains — the dedup REPORT a curation run reads
@@ -638,21 +633,6 @@ object Dedup {
   val PrAlpha = 0.85
   val PrIters = 10
 
-  /** L2/L5 — PageRank over the near-duplicate SIMILARITY GRAPH (nodes =
-    * all documents, symmetric edges = the exact-jaccard pairs of q16):
-    * the "centrality in the duplication structure" signal — a document
-    * with many near-duplicates concentrates rank, which curation uses to
-    * find boilerplate families and pick representative members. Standard
-    * distributed power iteration: the degree-annotated edge list persists
-    * once; every round is one join + one map-side-combined aggregation;
-    * dangling (isolated) mass is a 1-row aggregate redistributed
-    * uniformly; per-round `localCheckpoint` keeps lineage one join deep
-    * (the q105 discipline). Driver state is two scalars — nothing about
-    * the graph size. Emitted as n×rank (mean 1.0) so the scores read as
-    * relative centrality. Declared rows-only (iterative fixpoint, and
-    * per-node inflow sums are FP-order-dependent); PipelineSuite checks a
-    * driver-side reference within 1e-6 and that total rank is conserved.
-    */
   /** The degree-annotated symmetric edge list of a similarity graph
     * (keyed by `graph`: the exact q16 pairs or the LSH-verified q137
     * pairs), plus (n docs, n isolated docs) — persisted and memoized:
@@ -680,6 +660,21 @@ object Dedup {
       (edgesDeg, nodes, nDocs, nDocs - nConnected)
     }
 
+  /** L2/L5 — PageRank over the near-duplicate SIMILARITY GRAPH (nodes =
+    * all documents, symmetric edges = the exact-jaccard pairs of q16):
+    * the "centrality in the duplication structure" signal — a document
+    * with many near-duplicates concentrates rank, which curation uses to
+    * find boilerplate families and pick representative members. Standard
+    * distributed power iteration: the degree-annotated edge list persists
+    * once; every round is one join + one map-side-combined aggregation;
+    * dangling (isolated) mass is a 1-row aggregate redistributed
+    * uniformly; per-round `localCheckpoint` keeps lineage one join deep
+    * (the q105 discipline). Driver state is two scalars — nothing about
+    * the graph size. Emitted as n×rank (mean 1.0) so the scores read as
+    * relative centrality. Declared rows-only (iterative fixpoint, and
+    * per-node inflow sums are FP-order-dependent); PipelineSuite checks a
+    * driver-side reference within 1e-6 and that total rank is conserved.
+    */
   def similarityPageRank(spark: SparkSession, dir: String): DataFrame =
     pageRankOver(spark, dir, "exact")
 
@@ -941,22 +936,6 @@ object Dedup {
   /** False-positive rate for [[decontaminateBloom]]'s prefilter. */
   val DecontBloomFpp = 0.01
 
-  /** Benchmark decontamination via a BLOOM prefilter — [[decontaminate]]'s
-    * scale path for when the benchmark n-gram set is too big to broadcast
-    * exactly (a full eval-suite union at 100 TB is 10^8+ grams — tens of
-    * GBs as strings, ~100 MB as a 1% bloom filter). Two passes, exact
-    * result:
-    *
-    *  1. PREFILTER — the bloom filter (KBs–MBs, built by one aggregation
-    *     over the bench grams) broadcasts to every executor; the corpus
-    *     streams through `mightContain` and ~99% of its grams drop
-    *     without shuffling anything.
-    *  2. VERIFY — only the bloom survivors (true hits + fpp false
-    *     positives) shuffle into an equi-join against the exact bench
-    *     gram TABLE — which never broadcasts and never fans out — so
-    *     emitted hit counts are exact and hash-equal to [[decontaminate]]
-    *     (same oracle as q54).
-    */
   /** Distinct benchmark n-grams + their count, persisted and memoized per
     * (session, dir) like [[docShingles]]'s shingle frame — every
     * [[decontaminateBloom]] invocation (bench warmup + iterations, the
@@ -980,6 +959,22 @@ object Dedup {
       (g, g.count())
     }
 
+  /** Benchmark decontamination via a BLOOM prefilter — [[decontaminate]]'s
+    * scale path for when the benchmark n-gram set is too big to broadcast
+    * exactly (a full eval-suite union at 100 TB is 10^8+ grams — tens of
+    * GBs as strings, ~100 MB as a 1% bloom filter). Two passes, exact
+    * result:
+    *
+    *  1. PREFILTER — the bloom filter (KBs–MBs, built by one aggregation
+    *     over the bench grams) broadcasts to every executor; the corpus
+    *     streams through `mightContain` and ~99% of its grams drop
+    *     without shuffling anything.
+    *  2. VERIFY — only the bloom survivors (true hits + fpp false
+    *     positives) shuffle into an equi-join against the exact bench
+    *     gram TABLE — which never broadcasts and never fans out — so
+    *     emitted hit counts are exact and hash-equal to [[decontaminate]]
+    *     (same oracle as q54).
+    */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = table(spark, dir, "documents").select(col("doc_id"), col("source"), col("text"))
@@ -1075,13 +1070,8 @@ object Dedup {
       .flatMap { case (id, sh) => bandKernel(sh).map { case (b, k) => (id, b, k) } }
       .toDF("doc_id", "band", "bkey")
 
-    val candidates = banded
-      .groupBy(col("band"), col("bkey"))
-      .agg(collect_list(col("doc_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(col("ids"))
-      .as[Array[Long]]
-      .flatMap(ids => expandPairs(ids.sorted)((d1, d2) => (d1, d2)))
+    val candidates = bucketPairs[Long, (Long, Long)](
+      banded, Seq(col("band"), col("bkey")), Seq(col("doc_id")), None)((d1, d2) => (d1, d2))
       .toDF("d1", "d2")
       .distinct() // a pair may collide in many bands
 
@@ -1141,10 +1131,9 @@ object Dedup {
     * least one chunk), join per chunk, verify `bit_count(xor) <= 3`.
     */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val sigs = simhash(spark, dir)
-    val banded = sigs.select(
-      struct(col("doc_id").as("_1"), col("simhash").as("_2")).as("ds"),
+    val banded = simhash(spark, dir).select(
+      col("doc_id"),
+      col("simhash"),
       explode(
         array((0 until 4).map { b =>
           struct(
@@ -1152,17 +1141,11 @@ object Dedup {
             shiftright(col("simhash"), b * 16).bitwiseAND(lit(0xFFFFL)).as("chunk"))
         }: _*)
       ).as("bk")
-    ).select(col("ds"), col("bk.band"), col("bk.chunk"))
-
-    banded
-      .groupBy(col("band"), col("chunk"))
-      .agg(collect_list(col("ds")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(col("ids"))
-      .as[Array[(Long, Long)]]
-      .flatMap(ids =>
-        expandPairs(ids.sortBy(_._1)) { case ((d1, s1), (d2, s2)) => (d1, d2, s1, s2) })
-      .toDF("d1", "d2", "s1", "s2")
+    )
+    bucketPairs[(Long, Long), (Long, Long, Long, Long)](
+      banded, Seq(col("bk.band"), col("bk.chunk")), Seq(col("doc_id"), col("simhash")), None) {
+      case ((d1, s1), (d2, s2)) => (d1, d2, s1, s2)
+    }.toDF("d1", "d2", "s1", "s2")
       .dropDuplicates("d1", "d2")
       .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
       .filter(col("hamming") <= SimHashMaxHamming)
@@ -1197,26 +1180,43 @@ object Dedup {
     * survivors, q66's recall trade); this declared variant stays uncapped
     * because it is the hash-gated exact twin.
     */
-  def deltaDedup(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = docShingles(spark, dir)
+  def deltaDedup(spark: SparkSession, dir: String): DataFrame =
+    jaccardPairs(spark, dir, None)(deltaCommonCounts)
+
+  /** L2 at scale — [[deltaDedup]] with the [[MaxPostings]] cap composed
+    * in: the actual production daily-ingest path. The standing corpus
+    * index DROPS posting lists larger than the cap before any probe (a
+    * boilerplate shingle in 10^6 corpus docs would otherwise be one
+    * giant posting-list row AND fan each probe hit out by its full
+    * posting list), and the delta's own in-bucket expansion is capped
+    * the same way. Capped common counts are a LOWER bound, so pairs
+    * clearing the threshold on them are candidates; survivors are
+    * exact-verified on full shingle sets ([[verifyCandidates]]) so every
+    * emitted score is exact — precisely q66's two-stage trade
+    * ([[ngramJaccardCapped]]) applied to the incremental flow. Result ⊆
+    * [[deltaDedup]]; recall is asserted in PipelineSuite (1.0 on this
+    * corpus — planted dups share plenty of rare shingles).
+    */
+  def deltaDedupCapped(spark: SparkSession, dir: String): DataFrame =
+    jaccardPairs(spark, dir, Some(MaxPostings))(deltaCommonCounts)
+
+  /** (d1, d2, n1, n2, common) of every pair touching the delta: the
+    * common-count flow of [[deltaDedup]] and [[deltaDedupCapped]]. The
+    * standing index is the corpus posting lists (member id + set size)
+    * keyed by shingle; with a cap its hot lists are dropped before any
+    * probe, and the delta's own postings are capped the same way.
+    */
+  private def deltaCommonCounts(docs: DataFrame, cap: Option[Int]): DataFrame = {
     val isDelta = col("doc_id") % DeltaMod === 0
-    val delta = docs.filter(isDelta)
-    val corpus = docs.filter(!isDelta)
-    val deltaEx = delta.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-    // standing index: corpus posting lists (member id + set size), keyed
-    // by shingle
-    val corpusPost = corpus
-      .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-      .groupBy(col("s"))
-      .agg(collect_list(struct(col("doc_id").as("_1"), col("n_sh").as("_2"))).as("ids"))
+    val deltaEx = exploded(docs.filter(isDelta))
+    val corpusPost = postings[(Long, Int)](
+      exploded(docs.filter(!isDelta)), Seq(col("s")), Seq(col("doc_id"), col("n_sh")), cap)
     // delta-vs-corpus: each delta shingle probes the posting list — the
     // fan-out is |delta occurrences of s| × |postings(s)|, never
     // |postings(s)|². One probe hit = one shared shingle, so counting
-    // hits per (delta doc, corpus doc) yields the EXACT common-shingle
-    // count (both sides' shingle sets are complete) and jaccard needs no
-    // second look at the shingle arrays — the same count-based flow
-    // [[ngramJaccard]] uses, restricted.
+    // hits per (delta doc, corpus doc) yields the common-shingle count
+    // (exact when both sides' shingle sets are complete) and jaccard
+    // needs no second look at the shingle arrays.
     val crossPairs = deltaEx
       .join(corpusPost, "s")
       .select(
@@ -1231,71 +1231,8 @@ object Dedup {
     // new batch's own postings (20% of docs → ~4% of the pair space).
     // The two key spaces are disjoint (cross pairs always straddle the
     // mod boundary), so ONE aggregation over the unioned co-occurrence
-    // rows counts both, and the jaccard finalization runs once.
-    val deltaPairs = expandCoOccurrences(spark, deltaEx, None)
-      .select(col("d1"), col("d2"), col("n1"), col("n2"))
-    crossPairs.union(deltaPairs)
-      .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
-      .agg(count(lit(1)).as("common"))
-      .withColumn("jaccard", col("common") / (col("n1") + col("n2") - col("common")))
-      .filter(col("jaccard") >= JaccardThreshold)
-      .select(col("d1"), col("d2"), round(col("jaccard"), 4).as("jaccard"))
-      .orderBy(col("d1"), col("d2"))
-  }
-
-  /** L2 at scale — [[deltaDedup]] with the [[MaxPostings]] cap composed
-    * in: the actual production daily-ingest path. The standing corpus
-    * index DROPS posting lists larger than the cap before any probe (a
-    * boilerplate shingle in 10^6 corpus docs would otherwise be one
-    * giant `collect_list` row AND fan each probe hit out by its full
-    * posting list), and the delta's own in-bucket expansion is capped
-    * the same way. Capped common counts are a LOWER bound, so pairs
-    * clearing the threshold on them are candidates; survivors are
-    * exact-verified on full shingle sets ([[verifyCandidates]]) so every
-    * emitted score is exact — precisely q66's two-stage trade
-    * ([[ngramJaccardCapped]]) applied to the incremental flow. Result ⊆
-    * [[deltaDedup]]; recall is asserted in PipelineSuite (1.0 on this
-    * corpus — planted dups share plenty of rare shingles).
-    */
-  def deltaDedupCapped(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val docs = docShingles(spark, dir)
-    val isDelta = col("doc_id") % DeltaMod === 0
-    val delta = docs.filter(isDelta)
-    val corpus = docs.filter(!isDelta)
-    val deltaEx = delta.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-    // capped standing index: hot posting lists never materialize into the
-    // probe path — the per-shingle row is ≤ cap entries by construction,
-    // and (r12) the aggregation BUFFER is too (BoundedCollectAgg)
-    val corpusPost = corpus
-      .select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-      .select(col("s"), col("doc_id"), col("n_sh"))
-      .as[(String, Long, Int)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(new graft.rel.TopK.BoundedCollectAgg[(Long, Int)](MaxPostings).toColumn.name("ids"))
-      .toDF("s", "ids")
-      .filter(size(col("ids")) <= MaxPostings)
-    val crossPairs = deltaEx
-      .join(corpusPost, "s")
-      .select(
-        col("doc_id").as("dd"), col("n_sh").as("nd"),
-        explode(col("ids")).as("c"))
-      .select(
-        least(col("dd"), col("c._1")).as("d1"),
-        greatest(col("dd"), col("c._1")).as("d2"),
-        when(col("dd") < col("c._1"), col("nd")).otherwise(col("c._2")).as("n1"),
-        when(col("dd") < col("c._1"), col("c._2")).otherwise(col("nd")).as("n2"))
-    val deltaPairs = expandCoOccurrences(spark, deltaEx, Some(MaxPostings))
-      .select(col("d1"), col("d2"), col("n1"), col("n2"))
-    val survivors = crossPairs.union(deltaPairs)
-      .groupBy(col("d1"), col("d2"), col("n1"), col("n2"))
-      .agg(count(lit(1)).as("common"))
-      // capped common ≤ true common → lower-bound jaccard; final for
-      // recall, scores re-derived exactly below
-      .filter(col("common") / (col("n1") + col("n2") - col("common")) >= JaccardThreshold)
-      .select(col("d1"), col("d2"))
-    verifyCandidates(docs, survivors)
+    // rows counts both.
+    commonCounts(crossPairs.union(expandCoOccurrences(deltaEx, cap)))
   }
 
   /** L4 — per-document n-gram NOVELTY: the fraction of a doc's distinct
@@ -1309,9 +1246,7 @@ object Dedup {
     * for the fraction; nothing quadratic anywhere.
     */
   def ngramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val docs = docShingles(spark, dir)
-    val ex = docs.select(col("doc_id"), col("n_sh"), explode(col("sh")).as("s"))
-    withGlobalFreq(ex)
+    withGlobalFreq(docShingles(spark, dir))
       .groupBy(col("doc_id"))
       .agg(
         first(col("n_sh")).as("n_sh"),
@@ -1330,34 +1265,6 @@ object Dedup {
   val EditSimThreshold = 0.8
   val EditCandMinCommon = 3
 
-  /** L2 — EDIT-DISTANCE near-dup: the character-level complement of the
-    * set-based jaccard family. Shingle jaccard is blind to ORDER (a
-    * scrambled doc keeps its shingle profile at the margins) and
-    * over-penalizes short in-place edits that break every overlapping
-    * shingle; Levenshtein distance measures the literal rewrite cost.
-    * Production near-dup stacks (e.g. code-dedup pipelines) run exactly
-    * this two-stage shape: cheap set-similarity candidates, expensive
-    * sequence-level verification on the survivors.
-    *
-    * Stages: (1) candidates = pairs sharing ≥ [[EditCandMinCommon]]
-    * sub-cap shingles from the same capped inverted index as q66 —
-    * per-shingle fan-out bounded by [[MaxPostings]]²/2 at any corpus
-    * size; (2) a length prefilter (edit_sim ≥ t forces
-    * min(len) ≥ t·max(len)) drops mismatched pairs before any text is
-    * shuffled; (3) survivors join the text (the ONLY stage that moves
-    * full documents, sized by the candidate count, not the corpus) and
-    * verify `levenshtein ≤ (1−t)·max(len)`. t = 4/5 keeps BOTH gates in
-    * integer cross-multiplication and the distance is an integer, so
-    * the query hash-gates with zero FP in any comparison. The verify
-    * stage runs the banded O(L·k) cutoff kernel
-    * ([[boundedLevenshtein]], k = ⌊g/5⌋, early row exit) instead of the
-    * full O(L²) DP — measured 3.8× on the verify stage at sf0.1
-    * (7.0 s → 1.85 s) and the gap widens with document length, since
-    * k scales with (1−t)·L while the full DP scales with L².
-    * Result ⊆ true edit-near-dups with the same hot-shingle recall
-    * caveat as q66 (PipelineSuite: recall 1.0 vs a brute-force model
-    * here).
-    */
   /** Ukkonen banded Levenshtein with per-call cutoff: EXACT distance
     * whenever it is ≤ `maxDist`, any value > `maxDist` otherwise.
     * O(min-len·maxDist) cells instead of the full O(l1·l2) DP, plus an
@@ -1406,10 +1313,38 @@ object Dedup {
     math.min(prev(lb), inf)
   }
 
+  /** L2 — EDIT-DISTANCE near-dup: the character-level complement of the
+    * set-based jaccard family. Shingle jaccard is blind to ORDER (a
+    * scrambled doc keeps its shingle profile at the margins) and
+    * over-penalizes short in-place edits that break every overlapping
+    * shingle; Levenshtein distance measures the literal rewrite cost.
+    * Production near-dup stacks (e.g. code-dedup pipelines) run exactly
+    * this two-stage shape: cheap set-similarity candidates, expensive
+    * sequence-level verification on the survivors.
+    *
+    * Stages: (1) candidates = pairs sharing ≥ [[EditCandMinCommon]]
+    * sub-cap shingles from the same capped inverted index as q66 —
+    * per-shingle fan-out bounded by [[MaxPostings]]²/2 at any corpus
+    * size; (2) a length prefilter (edit_sim ≥ t forces
+    * min(len) ≥ t·max(len)) drops mismatched pairs before any text is
+    * shuffled; (3) survivors join the text (the ONLY stage that moves
+    * full documents, sized by the candidate count, not the corpus) and
+    * verify `levenshtein ≤ (1−t)·max(len)`. t = 4/5 keeps BOTH gates in
+    * integer cross-multiplication and the distance is an integer, so
+    * the query hash-gates with zero FP in any comparison. The verify
+    * stage runs the banded O(L·k) cutoff kernel
+    * ([[boundedLevenshtein]], k = ⌊g/5⌋, early row exit) instead of the
+    * full O(L²) DP — measured 3.8× on the verify stage at sf0.1
+    * (7.0 s → 1.85 s) and the gap widens with document length, since
+    * k scales with (1−t)·L while the full DP scales with L².
+    * Result ⊆ true edit-near-dups with the same hot-shingle recall
+    * caveat as q66 (PipelineSuite: recall 1.0 vs a brute-force model
+    * here).
+    */
   def editDistanceDup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = docShingles(spark, dir)
-    val cands = pairCommonCounts(spark, docs, Some(MaxPostings))
+    val cands = pairCommonCounts(docs, Some(MaxPostings))
       .filter(col("common") >= EditCandMinCommon)
       .select(col("d1"), col("d2"))
     val tx = graft.rel.Queries.spread(

@@ -6,29 +6,10 @@ import org.apache.spark.sql.functions._
 /** Shared text-decomposition expressions for the LLM-pipeline operators.
   * All pure Catalyst built-ins (codegen'd, no UDFs) so they stay inside
   * WholeStageCodegen and their DuckDB-SQL oracle twins can reproduce them
-  * token for token.
+  * token for token. Shingling itself runs in [[Dedup.shingleKernel]].
   */
 object Shingles {
 
   /** Whitespace tokens of `text` (the documents table is single-spaced). */
   def tokens(text: Column): Column = split(text, " ")
-
-  /** Distinct word n-gram shingles of `text`, each joined with a single
-    * space — e.g. n=3 turns "a b c d" into ["a b c", "b c d"]. Docs shorter
-    * than n tokens get an empty set (the `when` guard matters: Spark's
-    * `sequence(1, 0)` would count DOWN, not produce an empty array).
-    *
-    * DuckDB twin:
-    * `list_distinct(list_transform(range(1, greatest(len(w)-(n-2),1)),
-    *    i -> array_to_string(w[i:i+(n-1)], ' ')))`
-    */
-  def shingles(text: Column, n: Int): Column = {
-    val w = tokens(text)
-    array_distinct(
-      when(
-        size(w) >= n,
-        transform(sequence(lit(1), size(w) - (n - 1)), i => array_join(slice(w, i, lit(n)), " "))
-      ).otherwise(array().cast("array<string>"))
-    )
-  }
 }

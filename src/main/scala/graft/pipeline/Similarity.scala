@@ -922,13 +922,8 @@ object Similarity {
       .as[(Long, Array[Double])]
       .flatMap { case (id, v) => nearDupBuckets(v).map { case (t, b) => (id, t, b) } }
       .toDF("vec_id", "tbl", "bucket")
-    val candidates = banded
-      .groupBy(col("tbl"), col("bucket"))
-      .agg(collect_list(col("vec_id")).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(col("ids"))
-      .as[Array[Long]]
-      .flatMap(ids => Dedup.expandPairs(ids.sorted)((a, b) => (a, b)))
+    val candidates = Dedup.bucketPairs[Long, (Long, Long)](
+      banded, Seq(col("tbl"), col("bucket")), Seq(col("vec_id")), None)((a, b) => (a, b))
       .toDF("v1", "v2")
       .distinct()
     val a = all.select(col("vec_id").as("v1"), col("v").as("va"), col("norm").as("na"))

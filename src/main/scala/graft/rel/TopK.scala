@@ -77,8 +77,9 @@ object TopK {
     * (all elements fit under the cap); for a hot group the aggregation
     * state is O(cap) instead of O(group size) — the difference between a
     * 65-entry buffer and a 10⁷-struct buffer for one boilerplate shingle
-    * at 100 TB. Callers must still filter `length <= cap` on the output
-    * (the cap+1-length marker IS the over-cap signal).
+    * at 100 TB. The output still needs a `length <= cap` filter (the
+    * cap+1-length marker IS the over-cap signal); [[graft.pipeline.Dedup.postings]]
+    * applies it.
     */
   class BoundedCollectAgg[V](cap: Int)(implicit tt: TypeTag[V])
       extends Aggregator[V, Seq[V], Seq[V]] {

@@ -1563,23 +1563,6 @@ object Events {
       .parquet(dir)
   }
 
-  /** S2×L2 — DEDUP-ON-INGEST: the q98 incremental-dedup flow run as a
-    * REAL STREAMING execution. The arriving document batch (the q98
-    * delta: doc_id ≡ 0 mod [[graft.pipeline.Dedup.DeltaMod]]) streams in
-    * through a file source, is shingled ON THE STREAM by the same JIT
-    * kernel the batch path uses (a stateless typed map — no state
-    * store), stream-static equi-joins the STANDING corpus posting index
-    * (the static side a production deployment keeps materialized), and
-    * accumulates per-pair common counts in a streaming aggregation whose
-    * final state equals the batch answer — so the streamed result
-    * hash-gates against the same DuckDB oracle family as q16/q98,
-    * restricted to delta×corpus pairs (delta×delta pairs would need a
-    * stream-self-join; they belong to the batch pass that runs when the
-    * delta is folded in). This is the shape that turns daily-ingest
-    * dedup from a scheduled batch into a continuous gate: per-batch work
-    * is |arriving docs| × postings-hit, state is the pair-count table,
-    * and the corpus is never re-paired.
-    */
   /** Materialized standing corpus posting index for [[streamDeltaDedupFinal]]
     * — (c_id, n2, s) parquet staged once per dataset directory. A
     * production dedup-on-ingest deployment keeps exactly this table on
@@ -1601,7 +1584,7 @@ object Events {
   private def corpusPostingsPath(spark: SparkSession, dir: String): String =
     graft.Shared.staged(dir, "corpus-postings") { path =>
       import spark.implicits._
-      graft.rel.Queries
+      val rows = graft.rel.Queries
         .table(spark, dir, "documents")
         .filter(col("doc_id") % graft.pipeline.Dedup.DeltaMod =!= 0)
         .select(col("doc_id"), col("text")).as[(Long, String)]
@@ -1610,20 +1593,32 @@ object Events {
         })
         .toDF("c_id", "sh")
         .select(col("c_id"), size(col("sh")).as("n2"), explode(col("sh")).as("s"))
-        .select(col("s"), col("c_id"), col("n2"))
-        .as[(String, Long, Int)]
-        .groupByKey(_._1)
-        .mapValues(t => (t._2, t._3))
-        .agg(new graft.rel.TopK.BoundedCollectAgg[(Long, Int)](
-          graft.pipeline.Dedup.MaxPostings).toColumn.name("ids"))
-        .toDF("s", "ids")
-        .filter(size(col("ids")) <= graft.pipeline.Dedup.MaxPostings)
+      graft.pipeline.Dedup
+        .postings[(Long, Int)](
+          rows, Seq(col("s")), Seq(col("c_id"), col("n2")), Some(graft.pipeline.Dedup.MaxPostings))
         .select(col("s"), explode(col("ids")).as("e"))
         .select(col("e._1").as("c_id"), col("e._2").as("n2"), col("s"))
         .write.mode("overwrite").parquet(path)
       path
     }
 
+  /** S2×L2 — DEDUP-ON-INGEST: the q98 incremental-dedup flow run as a
+    * REAL STREAMING execution. The arriving document batch (the q98
+    * delta: doc_id ≡ 0 mod [[graft.pipeline.Dedup.DeltaMod]]) streams in
+    * through a file source, is shingled ON THE STREAM by the same JIT
+    * kernel the batch path uses (a stateless typed map — no state
+    * store), stream-static equi-joins the STANDING corpus posting index
+    * (the static side a production deployment keeps materialized), and
+    * accumulates per-pair common counts in a streaming aggregation whose
+    * final state equals the batch answer — so the streamed result
+    * hash-gates against the same DuckDB oracle family as q16/q98,
+    * restricted to delta×corpus pairs (delta×delta pairs would need a
+    * stream-self-join; they belong to the batch pass that runs when the
+    * delta is folded in). This is the shape that turns daily-ingest
+    * dedup from a scheduled batch into a continuous gate: per-batch work
+    * is |arriving docs| × postings-hit, state is the pair-count table,
+    * and the corpus is never re-paired.
+    */
   def streamDeltaDedupFinal(spark: SparkSession, dir: String): DataFrame = {
     val postings = corpusPostingsPath(spark, dir)
     drainToLocal(

@@ -120,9 +120,40 @@ class EngineWordCountSuite extends AnyFunSuite {
     assert(pairs.sorted == Seq("extra, 1", "word, 1"))
   }
 
+  test("a reduce that emits keys other than its group key still writes key-sorted, disjoint files") {
+    import TestSpark.spark
+    val outDir = Files.createTempDirectory("graft-wc-rev")
+    val r = 4
+    val spec = MapReduceSpec(1, Seq("x"), inputs, outDir.toString, r, 100, "wc-rev")
+    Engine.runJob(spark, spec, ReversedWordCount)
+    val outputs = readOutput(outDir, r)
+    // the group stage orders each partition by WORD; only the per-file
+    // sort after reduce orders it by the reversed words actually written
+    outputs.foreach { case (i, pairs) =>
+      val keys = pairs.map(_._1)
+      assert(keys == keys.sorted, s"output_$i not sorted by key")
+    }
+    val keysPerFile = outputs.map(_._2.map(_._1).toSet)
+    assert(keysPerFile.reduce(_ union _).size == keysPerFile.map(_.size).sum,
+      "keys not disjoint across files")
+    val got = outputs.flatMap(_._2).map { case (k, v) => k.reverse -> v.toLong }.toMap
+    assert(got == goldenCounts())
+  }
+
   test("unknown user_id fails like the reference's null factory lookup") {
     Registry.clear()
     val spec = MapReduceSpec(1, Seq("x"), inputs, "/tmp/never", 2, 10, "ghost")
     intercept[NoSuchElementException](Engine.run(TestSpark.spark, spec))
   }
+}
+
+/** Word count whose reduce emits the reversed word: an output key that is
+  * not the group key, so group order and output order differ.
+  */
+private object ReversedWordCount extends MrJob {
+  override def map(line: String, out: Emitter): Unit = WordCount.map(line, out)
+  override def reduce(key: String, values: Iterator[String], out: Emitter): Unit =
+    WordCount.reduce(key, values, new Emitter {
+      def emit(k: String, v: String): Unit = out.emit(k.reverse, v)
+    })
 }

@@ -489,10 +489,10 @@ class PipelineSuite extends AnyFunSuite {
     val hotDocs = (0L until (cap + 1L)).map(d => (d, 1L, 1L))
     val rare = Seq((0L, 2L, 2L), (1L, 2L, 2L))
     val wins = (hotDocs ++ rare).toDF("doc_id", "h1", "h2")
-    val capped = Dedup.sharedWindowPairCounts(spark, wins, Some(cap), "n").collect()
+    val capped = Dedup.sharedWindowPairCounts(wins, Some(cap), "n").collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(capped == Map((0L, 1L) -> 1L))
-    val uncapped = Dedup.sharedWindowPairCounts(spark, wins, None, "n").collect()
+    val uncapped = Dedup.sharedWindowPairCounts(wins, None, "n").collect()
     assert(uncapped.length == (cap + 1) * cap / 2) // all hot pairs present
   }
 

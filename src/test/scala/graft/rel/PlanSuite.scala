@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
@@ -646,6 +646,29 @@ class PlanSuite extends AnyFunSuite {
     assert(!read.contains("odate"), read)
     // the nested predicate reaches the scan as a pushed filter
     assert(p.contains("PushedFilters") && p.contains("meta.status"), p)
+  }
+
+  /** (shuffle exchanges, aggregates, object-hash aggregates) on the
+    * executed operator tree. The near-dup family shares one postings
+    * helper; these counts pin that each query keeps its own plan shape.
+    */
+  private def shape(df: DataFrame): (Int, Int, Int) = {
+    val nodes = Tree.nodes(df)
+    (nodes.count(_.isInstanceOf[ShuffleExchangeExec]),
+      nodes.count(_.isInstanceOf[BaseAggregateExec]),
+      nodes.count(_.isInstanceOf[ObjectHashAggregateExec]))
+  }
+
+  test("q16/q17/q66/q103: near-dup queries keep their exchange and aggregate counts") {
+    import graft.pipeline.Dedup
+    // postings + pair-count (or candidate distinct) + final sort; the
+    // uncapped postings are collect_list and the capped ones the bounded
+    // collect, both object-hash aggregates with a partial phase
+    assert(shape(Dedup.ngramJaccard(spark, dir)) == ((3, 4, 2)), "q16")
+    assert(shape(Dedup.minhashLsh(spark, dir)) == ((3, 4, 2)), "q17")
+    assert(shape(Dedup.ngramJaccardCapped(spark, dir)) == ((3, 4, 2)), "q66")
+    // corpus index and delta postings are two capped aggregations
+    assert(shape(Dedup.deltaDedupCapped(spark, dir)) == ((4, 6, 4)), "q103")
   }
 
   test("no declared query plans a cartesian product") {
