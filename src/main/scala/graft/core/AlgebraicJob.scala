@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** An algebraic MapReduce job: same map-side surface as [[MrJob]], but the
@@ -34,20 +34,23 @@ trait AlgebraicJob[B] extends Serializable {
 object AlgebraicJob {
 
   /** Bridges an [[AlgebraicJob]] reduce into a Spark typed [[Aggregator]]
-    * over the mapped (key, value) pairs. `finish` needs the key, which an
-    * Aggregator's reduction doesn't see — so the buffer carries it along:
-    * every row in one group has the same key by construction.
+    * over the mapped (key, value) pairs. Buffer and output are the job's
+    * accumulator alone: `finish(key, acc)` is applied by the engine after
+    * the aggregation, where the key is a column again
+    * ([[Engine.transformLinesAlgebraic]]). Keeping the key out of the buffer
+    * matters to the plan: a buffer whose encoder is a bare primitive
+    * (`Encoders.scalaLong`, …) runs in the codegen'd `HashAggregateExec`,
+    * while a struct buffer such as a `(key, acc)` tuple runs in
+    * `ObjectHashAggregateExec`, which falls back to sorting a task's rows
+    * once it has seen 128 keys.
     */
-  def aggregator[B](job: AlgebraicJob[B]): Aggregator[(String, String), (String, B), String] =
-    new Aggregator[(String, String), (String, B), String] {
-      override def zero: (String, B) = (null, job.zero)
-      override def reduce(acc: (String, B), row: (String, String)): (String, B) =
-        (row._1, job.add(acc._2, row._2))
-      override def merge(a: (String, B), b: (String, B)): (String, B) =
-        (if (a._1 != null) a._1 else b._1, job.merge(a._2, b._2))
-      override def finish(acc: (String, B)): String = job.finish(acc._1, acc._2)
-      override def bufferEncoder: Encoder[(String, B)] =
-        Encoders.tuple(Encoders.STRING, job.bufferEncoder)
-      override def outputEncoder: Encoder[String] = Encoders.STRING
+  def aggregator[B](job: AlgebraicJob[B]): Aggregator[(String, String), B, B] =
+    new Aggregator[(String, String), B, B] {
+      override def zero: B = job.zero
+      override def reduce(acc: B, row: (String, String)): B = job.add(acc, row._2)
+      override def merge(a: B, b: B): B = job.merge(a, b)
+      override def finish(acc: B): B = acc
+      override def bufferEncoder: Encoder[B] = job.bufferEncoder
+      override def outputEncoder: Encoder[B] = job.bufferEncoder
     }
 }

@@ -128,6 +128,20 @@ object Engine {
   /** The algebraic dataflow over an arbitrary line Dataset — the
     * [[transformLines]] twin for [[AlgebraicJob]]s, so any corpus column
     * can run through the Aggregator fast path too.
+    *
+    * The aggregate's buffer is the job's accumulator alone
+    * ([[AlgebraicJob.aggregator]]), and `finish(key, acc)` runs in a typed
+    * `map` after the per-file sort (a map keeps row order). A buffer whose
+    * encoder is a bare primitive (`Encoders.scalaLong`, as in word count)
+    * plans a codegen'd `HashAggregateExec` for both the partial and the
+    * final phase; a buffer that encodes as a struct (a tuple, a case class)
+    * or as a string plans `ObjectHashAggregateExec`, which sorts a task's
+    * rows once it has seen 128 keys. Grouping on the `key` column, as
+    * [[transformLines]] does, rather than `groupByKey(_._1)` keeps the
+    * partial aggregate in the map stage's generated code instead of behind
+    * a per-row key function. Because the repartition sits directly on the
+    * aggregate, its hash distribution makes `repartition(R, key)` redundant
+    * when R equals `spark.sql.shuffle.partitions`: one exchange.
     */
   def transformLinesAlgebraic[B](
       lines: Dataset[String],
@@ -136,10 +150,14 @@ object Engine {
     val spark = lines.sparkSession
     import spark.implicits._
     mapStage(lines, job.map)
-      .groupByKey(_._1)
+      .toDF("key", "value")
+      .groupBy(col("key"))
+      .as[String, (String, String)]
       .agg(AlgebraicJob.aggregator(job).toColumn.name("value"))
       .repartition(nOutputFiles, col("key"))
       .sortWithinPartitions("key")
+      .map { case (key, acc) => (key, job.finish(key, acc)) }
+      .toDF("key", "value")
       .as[(String, String)]
   }
 

@@ -30,7 +30,7 @@ object OutputSink {
     // R) can never leave stale files behind — `rename` does not overwrite on
     // every Hadoop FileSystem, so executors must find the destinations free.
     val dirPath = new Path(dirStr)
-    val dfs = dirPath.getFileSystem(new Configuration())
+    val dfs = dirPath.getFileSystem(HadoopConf.shared)
     dfs.mkdirs(dirPath)
     dfs.globStatus(new Path(dirPath, "{output_*,.output_*}"))
       .foreach(st => dfs.delete(st.getPath, false))
@@ -41,8 +41,9 @@ object OutputSink {
       val dir = new Path(dirStr)
       // newInstance, not getFileSystem: the cached instance is shared
       // JVM-wide, and setWriteChecksum on it would silently disable .crc
-      // sidecars for every other writer in this executor.
-      val fs = org.apache.hadoop.fs.FileSystem.newInstance(dir.toUri, new Configuration())
+      // sidecars for every other writer in this executor. The instance gets
+      // its own copy of the shared conf, not a freshly parsed one.
+      val fs = org.apache.hadoop.fs.FileSystem.newInstance(dir.toUri, new Configuration(HadoopConf.shared))
       // No sidecar .crc files — the contract is exactly R files (F12).
       fs.setWriteChecksum(false)
       val tmp = new Path(dir, s".output_${pid}.attempt${tc.taskAttemptId()}")

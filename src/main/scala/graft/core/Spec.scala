@@ -78,7 +78,7 @@ object MapReduceSpec {
       // may be globs — reject only what no reader could open.
       try {
         val p = new org.apache.hadoop.fs.Path(f)
-        val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
+        val fs = p.getFileSystem(HadoopConf.shared)
         val matches = fs.globStatus(p)
         if (matches == null || matches.isEmpty) errs += s"input file not readable: $f"
       } catch {

@@ -11,12 +11,23 @@ import graft.core.{Emitter, MrJob}
   * reference `src/mr_tasks.h:75-77` writes loop indices instead of values).
   */
 object WordCount extends MrJob {
-  // strtok(" ,.\"'") equivalence: any run of delimiters separates tokens,
-  // leading/trailing runs yield no empty token.
-  private val delims = "[ ,.\"']+"
+  // strtok(" ,.\"'") equivalence: each maximal run of non-delimiter chars
+  // is a token, so any run of delimiters separates tokens and leading or
+  // trailing runs yield no empty token. One scan, no per-line regex. Every
+  // delimiter is ASCII, so a cut never falls inside a surrogate pair.
+  override def map(line: String, out: Emitter): Unit = {
+    val n = line.length
+    var i = 0
+    while (i < n) {
+      while (i < n && isDelim(line.charAt(i))) i += 1
+      val start = i
+      while (i < n && !isDelim(line.charAt(i))) i += 1
+      if (i > start) out.emit(line.substring(start, i), "1")
+    }
+  }
 
-  override def map(line: String, out: Emitter): Unit =
-    line.split(delims).foreach(w => if (w.nonEmpty) out.emit(w, "1"))
+  private def isDelim(c: Char): Boolean =
+    c == ' ' || c == ',' || c == '.' || c == '"' || c == '\''
 
   override def reduce(key: String, values: Iterator[String], out: Emitter): Unit = {
     var sum = 0L

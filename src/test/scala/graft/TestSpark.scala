@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** One shared local SparkSession for the whole forked test JVM —
   * engine-level confs come from [[Sessions]].
@@ -18,4 +20,12 @@ object TestSpark {
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
+}
+
+/** The executed plan's operators, looking through adaptive wrappers and
+  * query stages — for asserting on the operator tree itself.
+  */
+object PlanTree extends AdaptiveSparkPlanHelper {
+  def nodes(ds: Dataset[_]): Seq[SparkPlan] = nodesUnder(ds.queryExecution.executedPlan)
+  def nodesUnder(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
 }

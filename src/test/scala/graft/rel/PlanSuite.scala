@@ -1,17 +1,18 @@
 package graft.rel
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
 import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, SparkPlan, TakeOrderedAndProjectExec}
-import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions.{col, sum}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{PlanTree => Tree, TestSpark}
 
 /** Physical-plan audit: the scale properties this engine claims must be
   * visible in the plans Catalyst actually produces, not just intended.
@@ -33,14 +34,6 @@ class PlanSuite extends AnyFunSuite {
     */
   private def execPlan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
-
-  /** The executed plan's operators, looking through adaptive wrappers
-    * and query stages — for asserting on the operator tree itself.
-    */
-  private object Tree extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
-    def nodes(df: DataFrame): Seq[SparkPlan] = nodesUnder(df.queryExecution.executedPlan)
-    def nodesUnder(p: SparkPlan): Seq[SparkPlan] = collect(p) { case n => n }
-  }
 
   test("q02: predicate pushdown and column pruning reach the parquet scan") {
     val p = plan(Queries.q02FilterProject(spark, dir))
@@ -76,18 +69,35 @@ class PlanSuite extends AnyFunSuite {
     assert("Arguments: hashpartitioning".r.findAllIn(p).size == 1, p)
   }
 
+  private def mrSpec(r: Int) = graft.core.MapReduceSpec(
+    nWorkers = 2, workerAddrs = Seq("a", "b"),
+    inputFiles = Seq(graft.core.MrFixture.inputs.head),
+    outputDir = "/tmp/plansuite-unused", nOutputFiles = r,
+    mapKilobytes = 100, userId = "wc")
+
   test("MR engine: whole job runs in exactly one shuffle") {
-    import graft.core._
-    val spec = MapReduceSpec(
-      nWorkers = 2, workerAddrs = Seq("a", "b"),
-      inputFiles = Seq(MrFixture.inputs.head),
-      outputDir = "/tmp/plansuite-unused", nOutputFiles = 4,
-      mapKilobytes = 100, userId = "wc")
-    val p = plan(Engine.transform(spark, spec, graft.jobs.WordCount).toDF)
+    val nodes = Tree.nodes(graft.core.Engine.transform(spark, mrSpec(4), graft.jobs.WordCount))
     // the repartition(R, key) shuffle is the ONLY exchange: groupBy reuses
     // its hash distribution and the output sort is within partitions
-    assert("""\(\d+\) Exchange""".r.findAllIn(p).size == 1, p)
-    assert(p.contains("REPARTITION_BY_NUM"), p)
+    val shuffles = nodes.collect { case s: ShuffleExchangeExec => s }
+    assert(shuffles.map(_.shuffleOrigin) == Seq(REPARTITION_BY_NUM), nodes.head.treeString)
+  }
+
+  test("MR engine, algebraic path: codegen'd hash aggregation, one exchange when R == shuffle partitions") {
+    // TestSpark runs 8 shuffle partitions: at R == 8 the aggregate's hash
+    // distribution makes the repartition(R, key) redundant; at R != 8 the
+    // reduced rows move once more
+    Seq(8 -> 1, 4 -> 2).foreach { case (r, exchanges) =>
+      val nodes = Tree.nodes(
+        graft.core.Engine.transformAlgebraic(spark, mrSpec(r), graft.jobs.WordCountAlgebraic))
+      val tree = nodes.head.treeString
+      val hashAggs = nodes.collect { case a: HashAggregateExec => a }
+      assert(hashAggs.size == 2, tree)
+      assert(hashAggs.count(_.aggregateExpressions.exists(_.mode == Partial)) == 1, tree)
+      assert(!nodes.exists(n => n.isInstanceOf[ObjectHashAggregateExec] ||
+        n.isInstanceOf[SortAggregateExec]), tree)
+      assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == exchanges, s"R=$r\n$tree")
+    }
   }
 
   test("q54: the benchmark n-gram set reaches executors via broadcast") {
