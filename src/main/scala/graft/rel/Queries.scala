@@ -23,8 +23,14 @@ import org.apache.spark.sql.functions._
   */
 object Queries {
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** An input table, read through its memoized schema
+    * ([[graft.Shared.parquetSchema]]): only the first read of a table
+    * under a given set of reader confs launches the inference job.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(graft.Shared.parquetSchema(spark, path)).parquet(path)
+  }
 
   /** Spreads a frame across at least `defaultParallelism` partitions before
     * a kernel-heavy stage. The local testdata tables are ONE parquet file

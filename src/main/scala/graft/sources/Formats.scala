@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.rel.Queries.table
+
 /** Source/sink surface beyond the engine's newline-text contract: CSV,
   * JSON-lines, and parquet with explicit schemas, plus a partitioned
   * parquet layout for partition-pruned scans.
@@ -84,7 +86,7 @@ object Formats {
     */
   def shardedRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     val out = java.nio.file.Files.createTempDirectory("graft-sharded").toString
-    val src = spark.read.parquet(s"$dir/documents.parquet")
+    val src = table(spark, dir, "documents")
       .select(col("doc_id"), md5(col("text")).as("text_hash"))
     writeSharded(src.repartition(2), out, ShardCap)
     val back = spark.read.parquet(out)
@@ -109,7 +111,7 @@ object Formats {
     */
   def nestedOrdersPath(spark: SparkSession, dir: String): String =
     graft.Shared.staged(dir, "nested-orders") { out =>
-      spark.read.parquet(s"$dir/orders.parquet")
+      table(spark, dir, "orders")
         .select(
           col("o_orderkey"),
           struct(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{
   DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.rel.Queries.events
+import graft.rel.Queries.{events, table}
 
 /** S1/S2 — event-time windowed aggregation over the `events` table
   * (`ts` timestamp, `user_id`, `event_type`, `value`).
@@ -180,11 +180,12 @@ object Events {
     }
 
   /** File stream over a staged feed directory: one file per
-    * micro-batch, schema from the staged files themselves.
+    * micro-batch, schema from the staged files themselves (inferred once
+    * per feed: a staged feed is immutable once its marker is written).
     */
   private[streaming] def readFeed(ss: SparkSession, feed: String): DataFrame =
     ss.readStream
-      .schema(ss.read.parquet(feed).schema)
+      .schema(graft.Shared.parquetSchema(ss, feed))
       .option("maxFilesPerTrigger", "1")
       .parquet(feed)
 
@@ -1019,8 +1020,7 @@ object Events {
       spark,
       "enriched_segments_final",
       { ss =>
-        val dim = ss.read
-          .parquet(s"$dir/customer.parquet")
+        val dim = table(ss, dir, "customer")
           .select(col("c_custkey").as("user_id"), col("c_mktsegment").as("mktsegment"))
         enrichWithDim(readEventStream(ss, dir), dim, "user_id")
           .groupBy(coalesce(col("mktsegment"), lit("(unmatched)")).as("mktsegment"))
@@ -1556,9 +1556,8 @@ object Events {
     * all longs and strings).
     */
   def readDocStream(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/documents.parquet") // schema probe only
     spark.readStream
-      .schema(raw.schema)
+      .schema(table(spark, dir, "documents").schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
   }
@@ -1721,16 +1720,16 @@ object Events {
   def readEventStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    val raw = spark.read.parquet(s"$dir/events.parquet") // schema probe only
+    val schema = table(spark, dir, "events").schema
     // the file stream source requires a DIRECTORY base path; select the
     // events table out of the sf dir with a glob filter
     val stream = spark.readStream
-      .schema(raw.schema)
+      .schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
     // this source streams the ORIGINAL table file, so the ts conversion
     // has to match its physical type (the staged paths normalize instead)
-    raw.schema("ts").dataType match {
+    schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         stream.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case _ => stream

@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBus
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -19,6 +23,21 @@ object TestSpark {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Spark jobs launched while `body` runs, counted once the listener bus
+    * has delivered every event before and after it.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger(0)
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    ListenerBus.drain(sc)
+    sc.addSparkListener(counter)
+    try { body; ListenerBus.drain(sc) } finally sc.removeSparkListener(counter)
+    jobs.get
   }
 }
 
