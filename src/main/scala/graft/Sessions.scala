@@ -54,6 +54,17 @@ object Sessions {
       // adds no session artifacts (no addArtifact/addJar), so there is
       // nothing to isolate.
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // Object-hash aggregation (typed aggregators with object buffers,
+      // collect_list, the bounded collect) switches a task to sort-based
+      // aggregation once it has seen this many keys; Spark's default is
+      // 128. The near-dup postings group per shingle or band bucket: at
+      // sf0.1 on 4 cores q17's (band, bkey) postings see ~40k keys per
+      // task, so every map and reduce task sorted its rows and rebuilt its
+      // buffers (15.6% of the perfbench queries workload's executor
+      // samples; 0 at this value). The bound still matters: on
+      // ScalingSmoke's 10x corpus the same postings pass it and fall back,
+      // and without it (10^6) q17 took 2.5 s there instead of 1.9 s.
+      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 131072)
       // checkpoint checksums stay at Spark's default (ON) here: only the
       // ephemeral drain checkpoints turn them off
       // (graft.streaming.Events.streamSession), so a durable checkpoint

@@ -97,7 +97,11 @@ object TextAnalysis {
 
   /** L4 — per-doc token statistics: token count, distinct count,
     * type-token ratio, mean token length. One narrow projection, no
-    * explode — the array functions fold inside codegen.
+    * explode — the array functions fold inside codegen. The summed token
+    * length is `length(text) − n + 1`: `split(text, " ")` cuts n tokens
+    * (empty ones included) at n − 1 one-character spaces, so this is exact
+    * and needs no higher-order `aggregate` over the tokens, which is
+    * interpreted per element (CodegenFallback).
     */
   def tokenStats(spark: SparkSession, dir: String): DataFrame = {
     val w = Shingles.tokens(col("text"))
@@ -107,8 +111,7 @@ object TextAnalysis {
         size(w).as("n_tokens"),
         size(array_distinct(w)).as("n_unique"),
         round(size(array_distinct(w)).cast("double") / size(w), 4).as("ttr"),
-        round(
-          aggregate(w, lit(0L), (acc, x) => acc + length(x)).cast("double") / size(w), 4)
+        round((length(col("text")) - size(w) + 1).cast("double") / size(w), 4)
           .as("avg_token_len"))
       .orderBy(col("doc_id"))
   }

@@ -72,17 +72,21 @@ object Events {
     sessions(events(spark, dir)).orderBy(col("user_id"), col("session_start"))
 
   /** State-partition count for the drained-stream wrappers below. A
-    * stateful streaming query materializes one state-store instance per
-    * shuffle partition PER MICRO-BATCH (for RocksDB: an on-disk instance
-    * with open/commit/maintenance cost each batch) — at the bench's 32
-    * shuffle partitions that fixed machinery dominated these bounded
-    * drains ~3× (r7 verdict: q68 2.0 s → 6.6 s in every window). On a
-    * real cluster state partitions are sized to key cardinality and
-    * update rate, not to the core count of whatever box submits the job —
-    * these wrappers drain a bounded table whose state (≤ thousands of
-    * keys) fits comfortably in a handful of stores.
+    * stateful operator loads and commits one state store per shuffle
+    * partition in EVERY micro-batch (a stream-stream join: four per
+    * partition), whatever the batch holds. These wrappers drain a bounded
+    * table whose state (at most thousands of keys) fits in a store or
+    * two, so more stores are fixed per-batch cost. Measured with a
+    * `graft.Bench` drain subset at sf0.1, local[8] on 4 cores, 3 runs per
+    * setting (median of the run medians, 8 → 1 → 2 partitions): q82 0.48
+    * → 0.37 → 0.41 s, q87 2.38 → 1.75 → 1.69, q88 1.96 → 1.31 → 1.29,
+    * q90 2.32 → 1.91 → 1.72, but q81 1.19 → 1.61 → 1.20: its session-
+    * window state work is CPU-heavy, and one store runs it in one task.
+    * Two keep every drain at or below its 8-partition time. On a real
+    * cluster state partitions are sized to key cardinality and update
+    * rate, not to the submitting box.
     */
-  val StreamStatePartitions = 8
+  val StreamStatePartitions = 2
 
   /** Child session for one streaming query: the memory sink's view
     * registers in the CHILD catalog, so concurrent or repeated queries

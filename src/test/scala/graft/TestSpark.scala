@@ -1,10 +1,12 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -25,20 +27,26 @@ object TestSpark {
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
 
-  /** Spark jobs launched while `body` runs, counted once the listener bus
-    * has delivered every event before and after it.
+  /** The listener-bus events `pick` matches while `body` runs, collected
+    * once the bus has delivered every event before and after it. Child
+    * sessions post to the same context bus (streaming progress included).
     */
-  def jobsDuring(body: => Unit): Int = {
+  def eventsDuring[T](pick: PartialFunction[SparkListenerEvent, T])(body: => Unit): Seq[T] = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger(0)
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    val got = new ConcurrentLinkedQueue[T]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = pick.lift(e).foreach(got.add)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = pick.lift(e).foreach(got.add)
     }
     ListenerBus.drain(sc)
-    sc.addSparkListener(counter)
-    try { body; ListenerBus.drain(sc) } finally sc.removeSparkListener(counter)
-    jobs.get
+    sc.addSparkListener(listener)
+    try { body; ListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
+    got.asScala.toSeq
   }
+
+  /** Spark jobs launched while `body` runs. */
+  def jobsDuring(body: => Unit): Int =
+    eventsDuring { case e: SparkListenerJobStart => e }(body).size
 }
 
 /** The executed plan's operators, looking through adaptive wrappers and

@@ -33,6 +33,42 @@ object KernelProperties extends Properties("Kernels") {
     Dedup.shingleKernel(t).toSeq == Dedup.ngramKernel(t, 3).toSeq
   }
 
+  property("modP == % (2^31 - 1) on the kernel's range, residues near P included") = {
+    val P = 2147483647L
+    val top = (1L << 62) + (1L << 31)
+    // multiples of P plus a small offset hit the fold's final subtract,
+    // which uniform draws almost never reach
+    val nearMultiple = for {
+      k <- Gen.choose(0L, top / P - 1)
+      d <- Gen.choose(-2L, 2L)
+    } yield math.max(0L, k * P + d)
+    forAll(Gen.oneOf(Gen.choose(0L, top - 1), nearMultiple)) { x =>
+      Dedup.modP(x) == x % P
+    }
+  }
+
+  property("bandKernel == MinHash bands with per-pair coefficients, bit for bit") = {
+    // any strings, so the shingle hash spans its whole range
+    val shingles = Gen.containerOf[Array, String](
+      Gen.oneOf(Gen.alphaStr, Gen.asciiStr, org.scalacheck.Arbitrary.arbitrary[String]))
+    forAll(shingles) { sh =>
+      val P = 2147483647L
+      val mins = Array.tabulate(Dedup.MinHashK) { i =>
+        sh.foldLeft(Long.MaxValue) { (m, s) =>
+          val h = (scala.util.hashing.MurmurHash3.stringHash(s) & 0x7FFFFFFFL) % P
+          val a = ((i + 1) * 0x9E3779B9L) % P
+          val b = (i * 0x85EBCA6BL + 0xC2B2AE35L) % P
+          math.min(m, (h * a + b) % P)
+        }
+      }
+      val expect = (0 until Dedup.MinHashBands).map { b =>
+        val rows = b * Dedup.MinHashRows until (b + 1) * Dedup.MinHashRows
+        (b, rows.foldLeft(1125899906842597L)((k, r) => k * 1000003L + mins(r)))
+      }
+      Dedup.bandKernel(sh).toSeq == expect
+    }
+  }
+
   property("WAV codec round-trips header + samples for any (doc_id, n_chars)") =
     forAll(Gen.choose(0L, 1000000L), Gen.choose(0, 5000)) { (docId, nChars) =>
       val d = Multimodal.wavDecode(Multimodal.wavEncode(docId, nChars))

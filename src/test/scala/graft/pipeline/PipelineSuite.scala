@@ -122,6 +122,31 @@ class PipelineSuite extends AnyFunSuite {
       s"recall ${capped.size}/${exact.size}; missing ${exact.keySet.diff(capped.keySet)}")
   }
 
+  test("q22 token stats on edge texts equal a driver-side split model") {
+    import spark.implicits._
+    val texts = Seq(
+      "", " ", "  ", "a", "the cat sat", " lead", "trail ", "double  space",
+      "  both  ends  ", "caf\u00e9 na\u00efve \u00fcber", "\u65e5\u672c \u8a9e",
+      "emoji \ud83d\ude00 pair \ud83d\ude00", "a a a b", "tab\tis one token")
+    val fixture = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val tmp = java.nio.file.Files.createTempDirectory("tokstats").toFile
+    tmp.deleteOnExit()
+    fixture.toDF("doc_id", "text").coalesce(1)
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val got = TextAnalysis.tokenStats(spark, tmp.toString).collect().toSeq
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getDouble(3), r.getDouble(4)))
+    def round4(x: Double): Double =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val expect = fixture.map { case (id, t) =>
+      // Spark's split keeps empty tokens; length counts code points
+      val w = t.split(" ", -1)
+      val chars = w.map(x => x.codePointCount(0, x.length)).sum
+      (id, w.length, w.distinct.length,
+        round4(w.distinct.length.toDouble / w.length), round4(chars.toDouble / w.length))
+    }
+    assert(got == expect)
+  }
+
   test("L4 token budget: two-pass prefix sum matches a driver model and splits a single source") {
     import spark.implicits._
     // ONE source — the shape that serialized the old per-source window —

@@ -681,6 +681,24 @@ class PlanSuite extends AnyFunSuite {
     assert(shape(Dedup.deltaDedupCapped(spark, dir)) == ((4, 6, 4)), "q103")
   }
 
+  test("q16/q17/q66/q103: no object-hash aggregate falls back to sort-based aggregation") {
+    import graft.pipeline.Dedup
+    // postings group per shingle or band bucket: far more than Spark's
+    // default 128 keys per task, each fallback a sort of the task's rows
+    Seq(
+      "q16" -> Dedup.ngramJaccard(spark, dir),
+      "q17" -> Dedup.minhashLsh(spark, dir),
+      "q66" -> Dedup.ngramJaccardCapped(spark, dir),
+      "q103" -> Dedup.deltaDedupCapped(spark, dir)).foreach { case (q, df) =>
+      df.collect()
+      val aggs = Tree.nodes(df).collect { case a: ObjectHashAggregateExec => a }
+      assert(aggs.nonEmpty, q)
+      aggs.foreach { a =>
+        assert(a.metrics("numTasksFallBacked").value == 0, s"$q: ${a.simpleString(200)}")
+      }
+    }
+  }
+
   test("no declared query plans a cartesian product") {
     graft.SparkEntry.queries.foreach { case (name, fn) =>
       val p = plan(fn(spark, dir))

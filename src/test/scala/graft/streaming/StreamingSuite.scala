@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -153,6 +153,21 @@ class StreamingSuite extends AnyFunSuite {
     // each drain runs on a fresh child session: a repeated drain must
     // reuse the code the first one compiled, not recompile its whole plan
     assert(TestSpark.compilesDuring(Events.tumblingStreamFinal(spark, dir).collect()) == 0)
+  }
+
+  test("q82: the drain runs 3 micro-batches with two state stores per stateful operator") {
+    val dir = "/root/testdata/sf0.001"
+    Events.tumblingStreamFinal(spark, dir).collect() // staged feed built, code warm
+    val batches = TestSpark.eventsDuring {
+      case e: StreamingQueryListener.QueryProgressEvent if e.progress.name == "tumbling_stream_final" =>
+        e.progress
+    }(Events.tumblingStreamFinal(spark, dir).collect())
+    assert(batches.map(_.batchId) == Seq(0L, 1L, 2L), batches.map(_.batchId))
+    val ops = batches.flatMap(_.stateOperators)
+    assert(ops.nonEmpty)
+    ops.foreach { op =>
+      assert((op.numShufflePartitions, op.numStateStoreInstances) == ((2L, 2L)), op.json)
+    }
   }
 
   test("q86: streamed-append sliding windows finalize to exactly the batch windows") {
