@@ -17,6 +17,12 @@ import org.apache.spark.sql.expressions.Aggregator
   * only approximates this with its mapper-side buffer
   * (`src/mr_tasks.h:44,55-62`) — values are pre-grouped per mapper but
   * still all shipped.
+  *
+  * The aggregate's input is the counted map stage's `(key, value, n)` rows
+  * (see [[CountingEmitter]]): `n` identical emits of one map task arrive as
+  * one row and `add(acc, value)` is applied to it `n` times, so `add` must
+  * not depend on how the emits were grouped — which commutativity and
+  * associativity already require.
   */
 trait AlgebraicJob[B] extends Serializable {
   def map(line: String, out: Emitter): Unit
@@ -34,7 +40,10 @@ trait AlgebraicJob[B] extends Serializable {
 object AlgebraicJob {
 
   /** Bridges an [[AlgebraicJob]] reduce into a Spark typed [[Aggregator]]
-    * over the mapped (key, value) pairs. Buffer and output are the job's
+    * over the counted map stage's `(key, value, n)` rows: `n` identical
+    * emits of `(key, value)` in one map task arrive as one row, and
+    * `reduce` folds `add` over it `n` times, so the result equals folding
+    * every emit. Buffer and output are the job's
     * accumulator alone: `finish(key, acc)` is applied by the engine after
     * the aggregation, where the key is a column again
     * ([[Engine.transformLinesAlgebraic]]). Keeping the key out of the buffer
@@ -44,10 +53,18 @@ object AlgebraicJob {
     * `ObjectHashAggregateExec`, which falls back to sorting a task's rows
     * once it has seen 128 keys.
     */
-  def aggregator[B](job: AlgebraicJob[B]): Aggregator[(String, String), B, B] =
-    new Aggregator[(String, String), B, B] {
+  def aggregator[B](job: AlgebraicJob[B]): Aggregator[(String, String, Long), B, B] =
+    new Aggregator[(String, String, Long), B, B] {
       override def zero: B = job.zero
-      override def reduce(acc: B, row: (String, String)): B = job.add(acc, row._2)
+      override def reduce(acc: B, row: (String, String, Long)): B = {
+        var a = acc
+        var i = 0L
+        while (i < row._3) {
+          a = job.add(a, row._2)
+          i += 1
+        }
+        a
+      }
       override def merge(a: B, b: B): B = job.merge(a, b)
       override def finish(acc: B): B = acc
       override def bufferEncoder: Encoder[B] = job.bufferEncoder

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** The MapReduce-parity engine — F3–F12 of SURVEY.md §2.1, re-expressed as a
@@ -10,19 +10,27 @@ import org.apache.spark.sql.functions.col
   *
   * Dataflow: `spark.read.textFile` (F3 split planning + F4 sharded scan are
   * Spark built-ins; `map_kilobytes` drives `spark.sql.files.maxPartitionBytes`)
-  * → `mapPartitions`+user map (F5/F6) → `repartition(R, key)` (F7 hash
+  * → `mapPartitions`+user map (F5/F6) counting identical `(key, value)`
+  * emits per map task into `(key, value, n)` rows ([[CountingEmitter]], the
+  * reference mapper's per-key grouping) → `repartition(R, key)` (F7 hash
   * partition: Murmur3 instead of the reference's `std::hash` — per-key
   * placement differs but the contract "each key in exactly one of R files"
-  * holds) → `groupBy(key)` typed `flatMapGroups` (F8 group + F10 reduce; the
-  * grouping reuses the repartition's hash distribution, so the whole job has
-  * exactly ONE shuffle) → `sortWithinPartitions` (F9 per-file key sort; no
-  * global sort — the reference model has none either, SURVEY.md §1.3) →
-  * [[OutputSink]] (F11/F12 exact `output_<i>` file naming).
+  * holds) → `groupBy(key)` typed `flatMapGroups` (F8 group + F10 reduce,
+  * each row replayed as `n` values; the grouping reuses the repartition's
+  * hash distribution, so the whole job has exactly ONE shuffle) →
+  * `sortWithinPartitions` (F9 per-file key sort; no global sort — the
+  * reference model has none either, SURVEY.md §1.3) → [[OutputSink]]
+  * (F11/F12 exact `output_<i>` file naming). A spec-file job runs on a
+  * scoped session with AQE off, so it is ONE Spark job: the map stage and
+  * the reduce stage, with no re-planning between them.
   *
   * Scale posture: no `collect`, no driver-side grouping; group values stream
   * through the reduce iterator (Spark sorts/spills the shuffle data, so a
-  * hot key never has to fit the mapper-side memory the reference burns in
-  * its unbounded `std::map`, `src/mr_tasks.h:44`).
+  * hot key never has to fit in memory). The map-side count is what the
+  * reference keeps in its unbounded `std::map` (`src/mr_tasks.h:44`), but
+  * bounded: a task flushes its window at 65,536 pairs or 8 Mi chars.
+  * Shuffle rows, sort and reduce-side work then scale with the distinct
+  * pairs of each map task, not with its emits.
   */
 object Engine {
 
@@ -59,10 +67,18 @@ object Engine {
     * at RDD build, so mutating the caller's shared session would both leak
     * the setting past this job and race two concurrent jobs with different
     * map_kilobytes.
+    *
+    * The scoped session also turns AQE off. The job's exchange is a
+    * fixed-R `REPARTITION_BY_NUM` and it has no join, so AQE has nothing
+    * to coalesce or split; it would still re-plan between the map and the
+    * reduce stage and run them as two Spark jobs. The algebraic path's
+    * aggregate exchange then has `spark.sql.shuffle.partitions` partitions,
+    * uncoalesced.
     */
   private def scan(spark: SparkSession, spec: MapReduceSpec): Dataset[String] = {
     val scoped = scopedSession(spark)
     scoped.conf.set("spark.sql.files.maxPartitionBytes", spec.mapKilobytes * 1000L)
+    scoped.conf.set("spark.sql.adaptive.enabled", false)
     scoped.read.textFile(spec.inputFiles: _*)
   }
 
@@ -94,14 +110,13 @@ object Engine {
     // required ClusteredDistribution(key) is already satisfied by the
     // repartition, so Catalyst inserts only a per-partition sort — one
     // shuffle total for the whole job.
-    mapStage(lines, job.map)
-      .toDF("key", "value")
+    countedMapStage(lines, job.map)
       .repartition(nOutputFiles, col("key"))
       .groupBy(col("key"))
-      .as[String, (String, String)]
-      .flatMapGroups { (key: String, rows: Iterator[(String, String)]) =>
+      .as[String, (String, String, Long)]
+      .flatMapGroups { (key: String, rows: Iterator[(String, String, Long)]) =>
         val e = new BufferingEmitter
-        job.reduce(key, rows.map(_._2), e)
+        job.reduce(key, CountingEmitter.values(rows), e)
         e.drain()
       }
       // F9: per-file sort by (emitted) key. Byte order == C++ std::string
@@ -141,7 +156,9 @@ object Engine {
     * partial aggregate in the map stage's generated code instead of behind
     * a per-row key function. Because the repartition sits directly on the
     * aggregate, its hash distribution makes `repartition(R, key)` redundant
-    * when R equals `spark.sql.shuffle.partitions`: one exchange.
+    * when R equals `spark.sql.shuffle.partitions`: one exchange. The
+    * aggregate's input is the counted map stage's `(key, value, n)` rows,
+    * and its `reduce` applies `add` `n` times.
     */
   def transformLinesAlgebraic[B](
       lines: Dataset[String],
@@ -149,10 +166,9 @@ object Engine {
       nOutputFiles: Int): Dataset[(String, String)] = {
     val spark = lines.sparkSession
     import spark.implicits._
-    mapStage(lines, job.map)
-      .toDF("key", "value")
+    countedMapStage(lines, job.map)
       .groupBy(col("key"))
-      .as[String, (String, String)]
+      .as[String, (String, String, Long)]
       .agg(AlgebraicJob.aggregator(job).toColumn.name("value"))
       .repartition(nOutputFiles, col("key"))
       .sortWithinPartitions("key")
@@ -161,21 +177,13 @@ object Engine {
       .as[(String, String)]
   }
 
-  /** F5+F6: per-record user map through a buffering emitter. One emitter per
-    * partition (reset per record by drain) keeps allocation off the hot path.
+  /** F5+F6: per-record user map through one [[CountingEmitter]] per map
+    * task, as columns `key`, `value` and `n` (the emit count, >= 1).
     */
-  private def mapStage(
-      lines: Dataset[String],
-      map: (String, Emitter) => Unit): Dataset[(String, String)] = {
+  private def countedMapStage(lines: Dataset[String], map: (String, Emitter) => Unit): DataFrame = {
     val spark = lines.sparkSession
     import spark.implicits._
-    lines.mapPartitions { it =>
-      val e = new BufferingEmitter
-      it.flatMap { line =>
-        map(line, e)
-        e.drain()
-      }
-    }
+    lines.mapPartitions(CountingEmitter.mapTask(_, map)).toDF("key", "value", "n")
   }
 
   def runJobAlgebraic[B](spark: SparkSession, spec: MapReduceSpec, job: AlgebraicJob[B]): Int = {

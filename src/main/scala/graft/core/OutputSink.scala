@@ -47,16 +47,21 @@ object OutputSink {
       // No sidecar .crc files — the contract is exactly R files (F12).
       fs.setWriteChecksum(false)
       val tmp = new Path(dir, s".output_${pid}.attempt${tc.taskAttemptId()}")
-      val out = fs.create(tmp, true)
+      // The temp file goes and the private FileSystem closes on every path:
+      // a loser of the rename race, and an attempt whose iterator throws.
       try {
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(out, "UTF-8"), 1 << 16)
-        it.foreach { case (k, v) => w.write(k); w.write(sep); w.write(v); w.write('\n') }
-        w.flush()
-      } finally out.close()
-      val dest = new Path(dir, s"output_$pid")
-      // First completed attempt wins; losers clean up after themselves.
-      try { if (!fs.rename(tmp, dest)) fs.delete(tmp, false) }
-      finally fs.close()
+        val out = fs.create(tmp, true)
+        try {
+          val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(out, "UTF-8"), 1 << 16)
+          it.foreach { case (k, v) => w.write(k); w.write(sep); w.write(v); w.write('\n') }
+          w.flush()
+        } finally out.close()
+        // First completed attempt wins.
+        fs.rename(tmp, new Path(dir, s"output_$pid"))
+      } finally {
+        try fs.delete(tmp, false)
+        finally fs.close()
+      }
       ()
     }
   }

@@ -370,7 +370,7 @@ object Queries {
   /** U1+U2 through the ACTUAL MR engine path — the same word count as
     * [[q14WordCount]], but executed by `Engine.transformLines`:
     * `documents.text` → `mapPartitions` + `WordCount.map` via
-    * `BufferingEmitter` (F5/F6) → one hash shuffle (F7) → typed
+    * `CountingEmitter` (F5/F6) → one hash shuffle (F7) → typed
     * `flatMapGroups` + `WordCount.reduce` (F8/F10). The q14 oracle gates
     * the engine's map/reduce/group semantics end-to-end, not a relational
     * twin of them.

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -36,6 +36,7 @@ object TestSpark {
     val got = new ConcurrentLinkedQueue[T]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = pick.lift(e).foreach(got.add)
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = pick.lift(e).foreach(got.add)
       override def onOtherEvent(e: SparkListenerEvent): Unit = pick.lift(e).foreach(got.add)
     }
     ListenerBus.drain(sc)
@@ -47,6 +48,10 @@ object TestSpark {
   /** Spark jobs launched while `body` runs. */
   def jobsDuring(body: => Unit): Int =
     eventsDuring { case e: SparkListenerJobStart => e }(body).size
+
+  /** The stages completed while `body` runs, with their task metrics. */
+  def stagesDuring(body: => Unit): Seq[StageInfo] =
+    eventsDuring { case e: SparkListenerStageCompleted => e.stageInfo }(body)
 }
 
 /** The executed plan's operators, looking through adaptive wrappers and
