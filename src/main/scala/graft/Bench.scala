@@ -215,8 +215,9 @@ object Bench {
     }.mkString("{", ",", "}")
     val detail =
       s"""{"iters":$iters,"cpus":$cpus,"detail":$runsJson,"errors":$errs,"prior":$priorJson,"sf":"$sfDir"}"""
-    // Subset runs get their own artifact: a profiling invocation must never
-    // clobber the full-suite BENCH_DETAIL.json the headline numbers cite.
+    // Subset runs get their own artifact under bench_history/: a profiling
+    // invocation must never clobber the full-suite BENCH_DETAIL.json the
+    // headline numbers cite, nor litter the checkout root.
     // Full-suite runs ALSO write a cpu-suffixed copy (r18): the driver's
     // scaling pass re-runs the bench at a lower core count in the same
     // directory, and in r17 that c8 run overwrote BENCH_DETAIL.json and
@@ -225,14 +226,15 @@ object Bench {
     val detailNames = only match {
       case Some(prefixes) =>
         val tag = prefixes.toSeq.sorted.mkString("-").filter(c => c.isLetterOrDigit || c == '-' || c == '_').take(60)
-        Seq(s"BENCH_DETAIL_$tag.json")
+        Seq(s"bench_history/BENCH_DETAIL_$tag.json")
       case None => Seq("BENCH_DETAIL.json", s"BENCH_DETAIL_c$cpus.json")
     }
     detailNames.foreach { detailName =>
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(detailName),
-        detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch {
+      try {
+        val path = java.nio.file.Paths.get(detailName).toAbsolutePath
+        java.nio.file.Files.createDirectories(path.getParent)
+        java.nio.file.Files.write(path, detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      } catch {
         // stderr, not stdout: a warning on stdout would compete with the
         // size-capped tail window the driver parses the metric line from
         case e: Throwable =>

@@ -115,6 +115,18 @@ object Multimodal {
       .toDF("doc_id", "frame_no", "frame")
   }
 
+  /** A synthesized media corpus: (doc_id, media) with `encode(doc_id)` as
+    * the payload of every document. The doc ids are spread first, so the
+    * per-doc encode runs partition-parallel.
+    */
+  def encodedCorpus(spark: SparkSession, dir: String)(encode: Long => Array[Byte]): DataFrame = {
+    import spark.implicits._
+    spread(table(spark, dir, "documents").select(col("doc_id")))
+      .as[Long]
+      .mapPartitions(_.map(id => (id, encode(id))))
+      .toDF("doc_id", "media")
+  }
+
   // ---- real audio decode (PCM WAV) --------------------------------------
 
   /** Deterministic synthesis parameters for the WAV corpus. The PAYLOAD
@@ -349,15 +361,6 @@ object Multimodal {
     BmpDecoded(w, h, bpp, rgb)
   }
 
-  /** The synthesized BMP corpus: (doc_id, media) with a real BMP payload. */
-  def bmpTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, bmpEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q138): decode the BMP corpus and emit per-doc image
     * features — header dimensions, mean luminance over all pixels, and
     * the TOP-row luminance sum (load-bearing for the bottom-up row
@@ -366,7 +369,7 @@ object Multimodal {
     */
   def bmpFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    bmpTable(spark, dir)
+    encodedCorpus(spark, dir)(bmpEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val d = bmpDecode(bytes)
@@ -618,15 +621,6 @@ object Multimodal {
     PngDecoded(w, h, bitDepth, colorType, rgb)
   }
 
-  /** The synthesized PNG corpus: (doc_id, media) with a real PNG payload. */
-  def pngTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, pngEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q154): decode the PNG corpus and emit per-doc image
     * features — header dimensions, mean luminance, top-row and
     * BOTTOM-row luminance sums. The bottom row reconstructs through the
@@ -636,7 +630,7 @@ object Multimodal {
     */
   def pngFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    pngTable(spark, dir)
+    encodedCorpus(spark, dir)(pngEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val d = pngDecode(bytes)
@@ -913,15 +907,6 @@ object Multimodal {
     GifDecoded(w, h, palette, indices)
   }
 
-  /** The synthesized GIF corpus: (doc_id, media) with a real GIF payload. */
-  def gifTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, gifEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q160): decode the GIF corpus and emit per-doc
     * features — dimensions, mean palette-mapped luminance, and the
     * top/bottom row luminance sums (any LZW dictionary or bit-packing
@@ -930,7 +915,7 @@ object Multimodal {
     */
   def gifFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    gifTable(spark, dir)
+    encodedCorpus(spark, dir)(gifEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val d = gifDecode(bytes)
@@ -986,6 +971,13 @@ object Multimodal {
     * 2^24) + 128)` with K[u][x] = round(C(u)·cos((2x+1)uπ/16)·2048) —
     * within ±1 of the real-valued IDCT (full-scale accuracy far inside
     * ITU T.83 §A bounds) and reproducible in integer SQL.
+    *
+    * All four JPEG tiers (q167 baseline gray, q174 baseline color, q175
+    * progressive gray, q179 progressive color) run through ONE codec:
+    * the [[JpegFrame]] model, one encoder driven by a scan script
+    * ([[jpegEncodeFrame]]) and one decoder ([[jpegDecodeCoefs]]: one
+    * marker walk, one scan walker, one plane stage). Each tier only
+    * names its frame, its scan script and its coefficient formulas.
     */
   val JpegIdctScaleBits = 11 // K table is round(C·cos · 2^11)
   val JpegIdctK: Array[Array[Long]] = Array(
@@ -1128,16 +1120,10 @@ object Multimodal {
     out.write(payload, 0, payload.length)
   }
 
-  /** Encode ARBITRARY quantized-coefficient blocks (natural-order 64-int
-    * arrays, raster block order for a (w, h) grayscale image) as a
-    * spec-compliant baseline JFIF stream. Split out of [[jpegEncode]] so
-    * the property suite can round-trip arbitrary coefficient grids
-    * through the real codec.
-    */
   /** Entropy-encode ONE quantized coefficient block (natural order): DC
     * diff + run-length AC with EOB/ZRL. Returns the new DC predictor.
-    * Shared by the grayscale and interleaved-color encoders so the
-    * trickiest logic exists once.
+    * Shared by every baseline scan of [[jpegEncodeFrame]] and by Video's
+    * codec so the trickiest logic exists once.
     */
   private[pipeline] def jpegWriteBlock(
       bw2: JpegBitWriter,
@@ -1167,7 +1153,8 @@ object Multimodal {
   }
 
   /** Entropy-decode ONE block into natural-order coefficients; returns
-    * (coefficients, new DC predictor). Shared by both decoders.
+    * (coefficients, new DC predictor). Shared by every baseline scan of
+    * [[jpegDecodeCoefs]] and by Video's decoder.
     */
   private[pipeline] def jpegReadBlock(
       br: JpegBitReader, dcTab: JpegHuffTable, acTab: JpegHuffTable,
@@ -1193,8 +1180,8 @@ object Multimodal {
   }
 
   /** Dequantization (zigzag-ordered table) + the exact integer IDCT of
-    * one block → 64 clamped pixels row-major. Shared by both pixel
-    * decoders.
+    * one block → 64 clamped pixels row-major. Shared by the plane stage
+    * of [[jpegDecodeCoefs]] and by Video's decoder.
     */
   private[pipeline] def jpegIdctBlock(coefs: Array[Int], quantZigzag: Array[Int]): Array[Int] = {
     val deq = new Array[Long](64)
@@ -1226,73 +1213,6 @@ object Multimodal {
       ly += 1
     }
     px
-  }
-
-  private[pipeline] def jpegEncodeImage(blocks: Array[Array[Int]], w: Int, h: Int): Array[Byte] = {
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    require(blocks.length == bw * bh && blocks.forall(_.length == 64), "bad block grid")
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xFF); out.write(0xD8) // SOI
-    // APP0 JFIF header — exercises the decoder's skip-by-length path
-    marker(out, 0xE0, Array[Byte](
-      'J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    // DQT: Pq=0 Tq=0, 64 entries in zigzag order
-    val dqt = new Array[Byte](65)
-    dqt(0) = 0
-    var k = 0
-    while (k < 64) {
-      val nat = JpegZigzag(k)
-      dqt(1 + k) = jpegQuant(nat % 8, nat / 8).toByte
-      k += 1
-    }
-    marker(out, 0xDB, dqt)
-    // SOF0: precision 8, h, w, one component (id 1, 1x1 sampling, Tq 0)
-    marker(out, 0xC0, Array[Byte](
-      8, (h >> 8).toByte, (h & 0xFF).toByte, (w >> 8).toByte, (w & 0xFF).toByte,
-      1, 1, 0x11, 0))
-    // DHT: both tables in ONE segment (decoder must loop within it)
-    val dht = new java.io.ByteArrayOutputStream()
-    dht.write(0x00); JpegDcBits.foreach(dht.write); JpegDcVals.foreach(dht.write)
-    dht.write(0x10); JpegAcBits.foreach(dht.write); JpegAcVals.foreach(dht.write)
-    marker(out, 0xC4, dht.toByteArray)
-    // SOS: one component, Td=0 Ta=0, full spectral selection
-    marker(out, 0xDA, Array[Byte](1, 1, 0x00, 0, 63, 0))
-    // entropy-coded scan
-    val dcCodes = huffAssign(JpegDcBits, JpegDcVals)
-    val acCodes = huffAssign(JpegAcBits, JpegAcVals)
-    val bw2 = new JpegBitWriter(out)
-    var pred = 0
-    var b = 0
-    while (b < blocks.length) {
-      pred = jpegWriteBlock(bw2, dcCodes, acCodes, blocks(b), pred)
-      b += 1
-    }
-    bw2.finish()
-    out.write(0xFF); out.write(0xD9) // EOI
-    out.toByteArray
-  }
-
-  /** Encode the synthesized corpus image for `docId` (coefficients from
-    * the integer formulas).
-    */
-  private[pipeline] def jpegEncode(docId: Long): Array[Byte] = {
-    val w = jpegWidth(docId); val h = jpegHeight(docId)
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    val blocks = Array.tabulate(bw * bh) { b =>
-      val coefs = new Array[Int](64)
-      coefs(0) = jpegDc(docId, b)
-      var v = 0
-      while (v < 8) {
-        var u = 0
-        while (u < 8) {
-          if (u != 0 || v != 0) coefs(v * 8 + u) = jpegAc(docId, b, u, v)
-          u += 1
-        }
-        v += 1
-      }
-      coefs
-    }
-    jpegEncodeImage(blocks, w, h)
   }
 
   /** Canonical Huffman decode table rebuilt from DHT's (BITS, HUFFVAL)
@@ -1372,9 +1292,7 @@ object Multimodal {
     if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
 
   /** Parse ONE DQT marker segment (possibly several tables) at `pos`
-    * into `quant`; returns the position after the segment. Shared by
-    * all three decoders (baseline gray, interleaved color, progressive)
-    * so the segment walk exists once.
+    * into `quant`; returns the position after the segment.
     */
   private def jpegParseDqt(bytes: Array[Byte], pos: Int, quant: Array[Array[Int]]): Int = {
     def u8(i: Int): Int = { require(i < bytes.length, "truncated JPEG"); bytes(i) & 0xFF }
@@ -1407,139 +1325,636 @@ object Multimodal {
     pos + 2 + len
   }
 
-  /** Structurally decoded JPEG: dims + quantized coefficient blocks
-    * (natural order, raster block order) + the quant table that applies
-    * to them — the lossless layer, before IDCT.
+  /** Progressive AC Huffman table: the baseline table's symbols PLUS the
+    * EOBn run codes (0x10..0x40 — runs of up to 31 blocks, far beyond
+    * this corpus's 12-block grids). Same canonical-order trick as
+    * [[JpegAcVals]]: nine never-emitted dummies absorb the 0-dense low
+    * codes so the stream stays 1-dense enough to exercise 0xFF00 byte
+    * stuffing; EOB0 (the most frequent symbol) sits on the all-but-one-
+    * ones code.
+    */
+  private val JpegProgAcBits: Array[Int] = { val a = new Array[Int](16); a(5) = 63; a }
+  private val JpegProgAcVals: Array[Int] =
+    (4 to 12).toArray ++ // 9 dummies: (run 0, size 4..12)
+      (for (r <- 15 to 0 by -1; s <- 1 to 3) yield (r << 4) | s) ++
+      Array(0x40, 0x30, 0x20, 0x10, 0xF0, 0x00) // EOB4..EOB1, ZRL, EOB0
+
+  /** Longest EOB run the [[JpegProgAcVals]] table can name in one
+    * symbol: EOB4 covers (1<<4) + receive(4) = 16..31 blocks. Runs are
+    * flushed at this bound so longer empty stretches split into legal
+    * symbols (the spec's own bound is 32767 via EOB14 — this corpus's
+    * table stops at EOB4).
+    */
+  private val JpegProgMaxEobRun = 31
+
+  /** The encoder's canonical codes, built once: every table of a corpus
+    * stream has the content above, whatever its id.
+    */
+  private val JpegDcCodes = huffAssign(JpegDcBits, JpegDcVals)
+  private val JpegAcCodes = huffAssign(JpegAcBits, JpegAcVals)
+  private val JpegProgAcCodes = huffAssign(JpegProgAcBits, JpegProgAcVals)
+
+  /** One AC FIRST scan (Ah=0) for band [ss, se] at point transform
+    * `al`: baseline run/size coding of coef/2^Al (truncated toward
+    * zero), with trailing-zero blocks folded into cross-block EOB runs.
+    */
+  private def progWriteAcFirst(bw: JpegBitWriter, codes: Map[Int, (Int, Int)],
+      blocks: Array[Array[Int]], ss: Int, se: Int, al: Int,
+      restartEvery: Int): Unit = {
+    var eobrun = 0
+    def flushEob(): Unit = if (eobrun > 0) {
+      val r = 31 - Integer.numberOfLeadingZeros(eobrun)
+      val (c, l) = codes(r << 4); bw.write(c, l)
+      if (r > 0) bw.write(eobrun - (1 << r), r)
+      eobrun = 0
+    }
+    var rstM = 0
+    var b = 0
+    while (b < blocks.length) {
+      if (restartEvery > 0 && b > 0 && b % restartEvery == 0) {
+        // an EOB run may not span a restart boundary: flush, then the
+        // byte-aligned RSTn (in a non-interleaved scan, MCU = 1 block)
+        flushEob()
+        bw.restart(rstM); rstM = (rstM + 1) & 7
+      }
+      val coefs = blocks(b)
+      var run = 0
+      var k = ss
+      while (k <= se) {
+        val c = coefs(JpegZigzag(k))
+        val t = if (c >= 0) c >> al else -((-c) >> al)
+        if (t == 0) run += 1
+        else {
+          flushEob()
+          while (run > 15) { val (z, zl) = codes(0xF0); bw.write(z, zl); run -= 16 }
+          val s = jpegCategory(t)
+          require(s <= 3, s"AC value $t exceeds the table's size categories")
+          val (cc, cl) = codes((run << 4) | s); bw.write(cc, cl)
+          bw.write(if (t < 0) t + (1 << s) - 1 else t, s)
+          run = 0
+        }
+        k += 1
+      }
+      if (run > 0) { eobrun += 1; if (eobrun == JpegProgMaxEobRun) flushEob() }
+      b += 1
+    }
+    flushEob()
+  }
+
+  /** One AC REFINEMENT scan (Ah = Al+1) for band [ss, se]: emits, in
+    * EXACTLY the order the decoder's G.7 walk consumes them, (a) Huffman
+    * (run, 1) symbols + sign bits for newly-significant coefficients
+    * (|coef| >> Al == 1), (b) correction bits (bit Al of |coef|) for
+    * every already-significant coefficient the walk passes, (c) ZRL for
+    * >15 zero-HISTORY gaps (correction positions don't count toward the
+    * run), and (d) cross-block EOB runs whose pending correction bits
+    * trail the EOBn symbol block-by-block.
+    */
+  private def progWriteAcRefine(bw: JpegBitWriter, codes: Map[Int, (Int, Int)],
+      blocks: Array[Array[Int]], ss: Int, se: Int, al: Int,
+      restartEvery: Int): Unit = {
+    var eobrun = 0
+    val pending = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def flushEob(): Unit = {
+      if (eobrun > 0) {
+        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
+        val (c, l) = codes(r << 4); bw.write(c, l)
+        if (r > 0) bw.write(eobrun - (1 << r), r)
+        eobrun = 0
+      }
+      pending.foreach(bit => bw.write(bit, 1))
+      pending.clear()
+    }
+    var rstM = 0
+    var b = 0
+    while (b < blocks.length) {
+      if (restartEvery > 0 && b > 0 && b % restartEvery == 0) {
+        flushEob() // run + its buffered correction bits end at the boundary
+        bw.restart(rstM); rstM = (rstM + 1) & 7
+      }
+      val coefs = blocks(b)
+      def temp(k: Int): Int = math.abs(coefs(JpegZigzag(k))) >> al
+      val newPos = (ss to se).filter(k => temp(k) == 1)
+      if (newPos.isEmpty) {
+        // no newly-significant coefficient: the block joins the EOB run;
+        // its band's correction bits ride behind the (future) EOBn symbol
+        eobrun += 1
+        var k = ss
+        while (k <= se) { if (temp(k) > 1) pending += (temp(k) & 1); k += 1 }
+        if (eobrun == JpegProgMaxEobRun) flushEob()
+      } else {
+        flushEob()
+        var cur = ss
+        for (np <- newPos) {
+          // the decoder walk consumes, per emitted symbol, the correction
+          // bits of the nonzero-history positions it passes — so each
+          // ZRL carries the corrections up to its 16th zero-history
+          // position, and the (run, 1) symbol carries the rest up to np
+          var segZeros = (cur until np).filter(k => temp(k) == 0)
+          while (segZeros.length > 15) {
+            val cut = segZeros(15) // the 16th zero-history position
+            val (z, zl) = codes(0xF0); bw.write(z, zl)
+            var k = cur
+            while (k < cut) { if (temp(k) > 1) bw.write(temp(k) & 1, 1); k += 1 }
+            cur = cut + 1
+            segZeros = segZeros.drop(16)
+          }
+          val (sc, sl) = codes((segZeros.length << 4) | 1); bw.write(sc, sl)
+          bw.write(if (coefs(JpegZigzag(np)) >= 0) 1 else 0, 1)
+          var k = cur
+          while (k < np) { if (temp(k) > 1) bw.write(temp(k) & 1, 1); k += 1 }
+          cur = np + 1
+        }
+        if (cur <= se) {
+          // trailing zero-history/correction positions: start an EOB run
+          eobrun += 1
+          var k = cur
+          while (k <= se) { if (temp(k) > 1) pending += (temp(k) & 1); k += 1 }
+          if (eobrun == JpegProgMaxEobRun) flushEob()
+        }
+      }
+      b += 1
+    }
+    flushEob()
+  }
+
+  // ---- the one JPEG codec: frame model, scan walker, encoder, decoder ----
+
+  /** One frame component: id, sampling factors (h, v) and quant table id. */
+  private[pipeline] final case class JpegComponent(id: Int, h: Int, v: Int, tq: Int)
+
+  /** The frame model (B.2.2): SOF0 (baseline) or SOF2 (progressive), the
+    * components, and the restart interval in MCUs (DRI; 0 = none). Each
+    * component's blocks live on its PADDED grid — the one an interleaved
+    * scan's MCU walk covers (mcuCols·h × mcuRows·v blocks) — while its
+    * plane is ceil(w·h/hmax) × ceil(h·v/vmax) pixels (A.1.1).
+    */
+  private[pipeline] final case class JpegFrame(progressive: Boolean, width: Int, height: Int,
+      comps: IndexedSeq[JpegComponent], restartInterval: Int) {
+    val hMax: Int = comps.map(_.h).max
+    val vMax: Int = comps.map(_.v).max
+    val mcuCols: Int = (width + 8 * hMax - 1) / (8 * hMax)
+    val mcuRows: Int = (height + 8 * vMax - 1) / (8 * vMax)
+    def paddedW(ci: Int): Int = mcuCols * comps(ci).h
+    def paddedH(ci: Int): Int = mcuRows * comps(ci).v
+    def planeW(ci: Int): Int = (width * comps(ci).h + hMax - 1) / hMax
+    def planeH(ci: Int): Int = (height * comps(ci).v + vMax - 1) / vMax
+  }
+
+  /** The grayscale frame: one 1×1 component on quant table 0. */
+  private def jpegGrayFrame(progressive: Boolean, w: Int, h: Int, restartEvery: Int): JpegFrame =
+    JpegFrame(progressive, w, h, Vector(JpegComponent(1, 1, 1, 0)), restartEvery)
+
+  /** The color frame: Y at the luma sampling factors on tables 0, Cb and
+    * Cr 1×1 on tables 1.
+    */
+  private[pipeline] def jpegColorFrame(progressive: Boolean, w: Int, h: Int,
+      sampling: (Int, Int), restartEvery: Int): JpegFrame =
+    JpegFrame(progressive, w, h, Vector(JpegComponent(1, sampling._1, sampling._2, 0),
+      JpegComponent(2, 1, 1, 1), JpegComponent(3, 1, 1, 1)), restartEvery)
+
+  /** One entry of a scan script: the frame components it codes (indices,
+    * in frame order), its spectral band [ss, se] and its successive
+    * approximation bits (ah, al). A baseline scan is (0, 63, 0, 0).
+    */
+  private[pipeline] final case class JpegScan(comps: Seq[Int], ss: Int, se: Int, ah: Int, al: Int)
+
+  /** One baseline scan over all `n` components (interleaved if n > 1). */
+  private[pipeline] def jpegBaselineScript(n: Int): Seq[JpegScan] = Seq(JpegScan(0 until n, 0, 63, 0, 0))
+
+  /** The six-scan grayscale progressive script: DC first Al=1; AC 1–5
+    * and 6–63 first Al=1; DC refine; AC 1–5 and 6–63 refine.
+    */
+  private[pipeline] val JpegProgGrayScript: Seq[JpegScan] = Seq(
+    JpegScan(Seq(0), 0, 0, 0, 1), JpegScan(Seq(0), 1, 5, 0, 1), JpegScan(Seq(0), 6, 63, 0, 1),
+    JpegScan(Seq(0), 0, 0, 1, 0), JpegScan(Seq(0), 1, 5, 1, 0), JpegScan(Seq(0), 6, 63, 1, 0))
+
+  /** The spec's canonical color-progressive script, eight scans: ONE
+    * interleaved DC first (Al=1), per-component AC firsts, one
+    * interleaved DC refine, per-component AC refines — AC scans are
+    * never interleaved in a progressive frame (G.1.1.1.1).
+    */
+  private[pipeline] val JpegProgColorScript: Seq[JpegScan] =
+    Seq((0, 1), (1, 0)).flatMap { case (ah, al) =>
+      JpegScan(0 until 3, 0, 0, ah, al) +: (0 until 3).map(ci => JpegScan(Seq(ci), 1, 63, ah, al))
+    }
+
+  /** The scan walker: the blocks one scan visits in order, the frame
+    * component of each, and the restart period in blocks. A scan of
+    * several components walks MCUs on the padded grid — per MCU each
+    * component's h×v blocks, left-to-right then top-to-bottom (A.2.3); a
+    * one-component scan walks that component's REDUCED grid, the
+    * ceil(planeWidth/8) × ceil(planeHeight/8) blocks covering its plane,
+    * one block per MCU (A.2.2). The arrays are shared by reference, so
+    * a scan decoder fills them in place.
+    */
+  private def jpegScanOrder(f: JpegFrame, blocks: Array[Array[Array[Int]]], comps: Seq[Int])
+      : (Array[Array[Int]], Array[Int], Int) = {
+    val seq = Array.newBuilder[Array[Int]]
+    val of = Array.newBuilder[Int]
+    if (comps.length == 1) {
+      val ci = comps.head
+      for (by <- 0 until (f.planeH(ci) + 7) / 8; bx <- 0 until (f.planeW(ci) + 7) / 8) {
+        seq += blocks(ci)(by * f.paddedW(ci) + bx); of += ci
+      }
+      (seq.result(), of.result(), f.restartInterval)
+    } else {
+      for (my <- 0 until f.mcuRows; mx <- 0 until f.mcuCols; ci <- comps) {
+        val c = f.comps(ci)
+        for (by <- 0 until c.v; bx <- 0 until c.h) {
+          seq += blocks(ci)((my * c.v + by) * f.paddedW(ci) + mx * c.h + bx); of += ci
+        }
+      }
+      (seq.result(), of.result(), f.restartInterval * comps.map(ci => f.comps(ci).h * f.comps(ci).v).sum)
+    }
+  }
+
+  /** The one encoder: SOI, APP0, DQT, SOF0/SOF2, DHT, DRI (if any), then
+    * each scan of `script` over `blocks` (per component, natural-order
+    * blocks on its padded grid), then EOI. Quant table 0 is
+    * [[jpegQuant]] and 1 is [[jpegQuantChroma]]; each component names the
+    * Huffman tables whose id is its quant table id.
+    */
+  private[pipeline] def jpegEncodeFrame(f: JpegFrame, script: Seq[JpegScan],
+      blocks: Array[Array[Array[Int]]]): Array[Byte] = {
+    require(blocks.length == f.comps.length && blocks.indices.forall(ci =>
+      blocks(ci).length == f.paddedW(ci) * f.paddedH(ci) && blocks(ci).forall(_.length == 64)),
+      "bad block grid")
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(0xFF); out.write(0xD8) // SOI
+    // APP0 JFIF header — exercises the decoder's skip-by-length path
+    marker(out, 0xE0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
+    // DQT: every table in ONE segment (the decoder must loop), Pq=0,
+    // 64 entries in zigzag order
+    val tables = 0 to f.comps.map(_.tq).max
+    val dqt = new java.io.ByteArrayOutputStream()
+    for (tq <- tables) {
+      dqt.write(tq)
+      for (k <- 0 until 64) {
+        val nat = JpegZigzag(k)
+        dqt.write(if (tq == 0) jpegQuant(nat % 8, nat / 8) else jpegQuantChroma(nat % 8, nat / 8))
+      }
+    }
+    marker(out, 0xDB, dqt.toByteArray)
+    marker(out, if (f.progressive) 0xC2 else 0xC0, Array[Byte](8,
+      (f.height >> 8).toByte, f.height.toByte, (f.width >> 8).toByte, f.width.toByte,
+      f.comps.length.toByte) ++ f.comps.flatMap(c => Seq(c.id, (c.h << 4) | c.v, c.tq).map(_.toByte)))
+    // DHT: every table in ONE segment (the decoder must loop within it).
+    // Tables of different ids carry the same content, so the decoder
+    // must still select by the id each scan component names. Baseline
+    // lists each id's DC then AC table, progressive all DC tables first.
+    val (acBits, acVals, acCodes) =
+      if (f.progressive) (JpegProgAcBits, JpegProgAcVals, JpegProgAcCodes)
+      else (JpegAcBits, JpegAcVals, JpegAcCodes)
+    val tcths = if (f.progressive) tables ++ tables.map(0x10 | _) else tables.flatMap(t => Seq(t, 0x10 | t))
+    val dht = new java.io.ByteArrayOutputStream()
+    for (tcth <- tcths) {
+      dht.write(tcth)
+      if (tcth < 0x10) { JpegDcBits.foreach(dht.write); JpegDcVals.foreach(dht.write) }
+      else { acBits.foreach(dht.write); acVals.foreach(dht.write) }
+    }
+    marker(out, 0xC4, dht.toByteArray)
+    // DRI: restart every `restartInterval` MCUs — byte-aligned RSTn
+    // markers, DC prediction and EOB-run resets, the marker id cycling
+    if (f.restartInterval > 0)
+      marker(out, 0xDD, Array[Byte]((f.restartInterval >> 8).toByte, f.restartInterval.toByte))
+    for (s <- script) {
+      require(!f.progressive || s.ss == 0 || s.comps.length == 1, "progressive AC scans are non-interleaved")
+      // SOS: each component names its DC table where the scan codes DC
+      // and its AC table where it codes AC (Td/Ta = 0 otherwise)
+      marker(out, 0xDA, (s.comps.length +: s.comps.flatMap { ci =>
+        val t = f.comps(ci).tq
+        Seq(f.comps(ci).id, (if (s.ss == 0) t << 4 else 0) | (if (s.se > 0) t else 0))
+      } ++: Seq(s.ss, s.se, (s.ah << 4) | s.al)).map(_.toByte).toArray)
+      val (seq, of, every) = jpegScanOrder(f, blocks, s.comps)
+      val bw = new JpegBitWriter(out)
+      if (s.ss > 0) {
+        if (s.ah == 0) progWriteAcFirst(bw, acCodes, seq, s.ss, s.se, s.al, every)
+        else progWriteAcRefine(bw, acCodes, seq, s.ss, s.se, s.al, every)
+      } else {
+        val pred = new Array[Int](f.comps.length)
+        var rstM = 0
+        for (b <- seq.indices) {
+          if (every > 0 && b > 0 && b % every == 0) {
+            bw.restart(rstM); rstM = (rstM + 1) & 7
+            java.util.Arrays.fill(pred, 0)
+          }
+          val ci = of(b)
+          if (!f.progressive) pred(ci) = jpegWriteBlock(bw, JpegDcCodes, acCodes, seq(b), pred(ci))
+          else if (s.ah == 0) {
+            // DC first: prediction runs in the SHIFTED domain (arithmetic >> Al)
+            val t = seq(b)(0) >> s.al
+            val diff = t - pred(ci); pred(ci) = t
+            val cat = jpegCategory(diff)
+            val (c, l) = JpegDcCodes(cat); bw.write(c, l)
+            if (cat > 0) bw.write(if (diff < 0) diff + (1 << cat) - 1 else diff, cat)
+          } else bw.write((seq(b)(0) >> s.al) & 1, 1) // DC refine: one raw bit, no Huffman
+        }
+      }
+      bw.finish()
+    }
+    out.write(0xFF); out.write(0xD9) // EOI
+    out.toByteArray
+  }
+
+  /** Quantized coefficient blocks of a synthesized corpus image: per
+    * component, one natural-order block per padded-grid index `b`, with
+    * DC `dc(ci, b)` and AC (u, v) ≠ (0, 0) `ac(ci, b, u, v)`.
+    */
+  private def jpegSynthBlocks(f: JpegFrame)(
+      dc: (Int, Int) => Int, ac: (Int, Int, Int, Int) => Int): Array[Array[Array[Int]]] =
+    Array.tabulate(f.comps.length) { ci =>
+      Array.tabulate(f.paddedW(ci) * f.paddedH(ci)) { b =>
+        val coefs = new Array[Int](64)
+        coefs(0) = dc(ci, b)
+        var k = 1
+        while (k < 64) { coefs(k) = ac(ci, b, k % 8, k / 8); k += 1 }
+        coefs
+      }
+    }
+
+  /** Decode ONE scan into the accumulating coefficient blocks (`blocks`
+    * in scan order, `comp` the frame component of each): a baseline
+    * scan reads whole blocks through [[jpegReadBlock]]; a progressive
+    * scan follows G.1.2/G.2 of the spec (the jdphuff walk) — DC first/
+    * refine, AC first with EOB runs and ZRL, AC refine with the
+    * correction-bit walk.
+    */
+  private def progDecodeScan(br: JpegBitReader, blocks: Array[Array[Int]], comp: Array[Int],
+      restartInterval: Int, ss: Int, se: Int, ah: Int, al: Int,
+      dcTabs: Array[JpegHuffTable], acTabs: Array[JpegHuffTable], baseline: Boolean): Unit = {
+    val usesDc = baseline || (ss == 0 && ah == 0)
+    val usesAc = baseline || ss > 0
+    require(comp.distinct.forall(c => (!usesDc || dcTabs(c) != null) && (!usesAc || acTabs(c) != null)),
+      "missing Huffman tables for scan")
+    require(baseline || ss > 0 || se == 0, "a DC progressive scan must have Se = 0")
+    val pred = new Array[Int](dcTabs.length)
+    val p1 = 1 << al
+    var eobrun = 0
+    var rstM = 0
+    var b = 0
+    while (b < blocks.length) {
+      if (restartInterval > 0 && b > 0 && b % restartInterval == 0) {
+        // at each interval boundary the stream byte-aligns, carries the
+        // next RSTn of the cycle, and resets ALL entropy state (DC
+        // prediction, EOB run). G.1.2.x: an EOB run may not span a
+        // restart boundary — the encoder flushes it, so a nonzero count
+        // here is a corrupt stream and must fail loudly, not silently
+        // drop the tail
+        require(eobrun == 0, "EOB run crosses a restart boundary")
+        br.expectRestart(rstM); rstM = (rstM + 1) & 7
+        java.util.Arrays.fill(pred, 0)
+      }
+      val coefs = blocks(b)
+      val c = comp(b)
+      if (baseline) {
+        val (read, dc) = jpegReadBlock(br, dcTabs(c), acTabs(c), pred(c))
+        System.arraycopy(read, 0, coefs, 0, 64); pred(c) = dc
+      } else if (ss == 0) {
+        if (ah == 0) {
+          val s = dcTabs(c).decode(br)
+          pred(c) += jpegExtend(br.receive(s), s)
+          coefs(0) = pred(c) << al
+        } else if (br.readBit() == 1) coefs(0) |= p1
+      } else if (ah == 0) {
+        // AC first: baseline run/size within the band, values << Al,
+        // EOBn ends the band for (1<<r)+ext consecutive blocks
+        if (eobrun > 0) eobrun -= 1
+        else {
+          var k = ss
+          var done = false
+          while (k <= se && !done) {
+            val rs = acTabs(c).decode(br)
+            val r = rs >> 4; val s = rs & 0x0F
+            if (s == 0) {
+              if (r == 15) k += 16
+              else { eobrun = (1 << r) + (if (r > 0) br.receive(r) else 0) - 1; done = true }
+            } else {
+              k += r
+              require(k <= se, "AC run overflows the spectral band")
+              coefs(JpegZigzag(k)) = jpegExtend(br.receive(s), s) << al
+              k += 1
+            }
+          }
+        }
+      } else {
+        // AC refinement — the G.7 walk: symbols name newly-significant
+        // coefficients; every already-nonzero coefficient the walk
+        // passes consumes one correction bit; EOB runs consume the
+        // remaining band corrections of each member block
+        def refine(nat: Int): Unit =
+          if (br.readBit() == 1 && (coefs(nat) & p1) == 0)
+            coefs(nat) += (if (coefs(nat) >= 0) p1 else -p1)
+        var k = ss
+        if (eobrun == 0) {
+          var ended = false
+          while (k <= se && !ended) {
+            val rs = acTabs(c).decode(br)
+            var r = rs >> 4; val s = rs & 0x0F
+            var newVal = 0
+            if (s != 0) {
+              require(s == 1, "refinement symbols carry size 1 only")
+              newVal = if (br.readBit() == 1) p1 else -p1
+            } else if (r != 15) {
+              eobrun = (1 << r) + (if (r > 0) br.receive(r) else 0)
+              ended = true
+            } // r == 15, s == 0: ZRL — newVal stays 0, walk skips 16
+            if (!ended) {
+              var placed = false
+              while (k <= se && !placed) {
+                val nat = JpegZigzag(k)
+                if (coefs(nat) != 0) refine(nat)
+                else if (r == 0) { if (newVal != 0) coefs(nat) = newVal; placed = true }
+                else r -= 1
+                k += 1
+              }
+              require(placed || newVal == 0, "refinement run overflows the band")
+            }
+          }
+        }
+        if (eobrun > 0) {
+          // EOB-run member (including the block that declared it):
+          // remaining nonzero-history positions consume correction bits
+          while (k <= se) {
+            val nat = JpegZigzag(k)
+            if (coefs(nat) != 0) refine(nat)
+            k += 1
+          }
+          eobrun -= 1
+        }
+      }
+      b += 1
+    }
+  }
+
+  /** What the decoder recovers before any IDCT: the frame, the quant
+    * tables by id (zigzag order) and each component's natural-order
+    * coefficient blocks on its padded grid — the lossless layer.
+    */
+  private[pipeline] final case class JpegCoefs(frame: JpegFrame,
+      quant: Array[Array[Int]], blocks: Array[Array[Array[Int]]]) {
+    def quantOf(ci: Int): Array[Int] = {
+      val qt = quant(frame.comps(ci).tq)
+      require(qt != null, s"missing quant table ${frame.comps(ci).tq}")
+      qt
+    }
+  }
+
+  /** The one decoder. Real parser: every field comes from the BYTES. One
+    * marker walk from SOI to EOI over APPn/COM (skipped by length), DQT,
+    * DHT, DRI, SOF0/SOF2 and one or more SOS; each scan accumulates its
+    * bands and bits into the shared coefficient grids through the scan
+    * walker. The caller names the frame kind and the component count it
+    * accepts: a stream of any other kind fails at its SOF marker.
+    */
+  private[pipeline] def jpegDecodeCoefs(bytes: Array[Byte], progressive: Boolean,
+      nComps: Int): JpegCoefs = {
+    def u8(i: Int): Int = { require(i < bytes.length, "truncated JPEG"); bytes(i) & 0xFF }
+    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
+    require(bytes.length >= 4 && u8(0) == 0xFF && u8(1) == 0xD8, "not a JPEG: missing SOI")
+    var pos = 2
+    val quant = new Array[Array[Int]](4)
+    val huff = Array.fill(2, 4)(null: JpegHuffTable)
+    var frame: JpegFrame = null
+    var blocks: Array[Array[Array[Int]]] = null
+    var restartInterval = 0
+    var scans = 0
+    var done = false
+    while (!done) {
+      require(u8(pos) == 0xFF, f"expected marker at $pos, got 0x${u8(pos)}%02X")
+      u8(pos + 1) match {
+        case 0xDB => pos = jpegParseDqt(bytes, pos, quant)
+        case 0xC4 => pos = jpegParseDht(bytes, pos, huff)
+        case 0xDD => // DRI: restart interval in MCUs
+          restartInterval = u16(pos + 4)
+          pos += 2 + u16(pos + 2)
+        case m @ (0xC0 | 0xC2) =>
+          require(frame == null, "more than one SOF")
+          require((m == 0xC2) == progressive,
+            if (progressive) "baseline SOF0 stream fed to the progressive decoder"
+            else "progressive SOF2 stream fed to the baseline decoder")
+          require(u8(pos + 4) == 8, "only 8-bit precision supported")
+          require(u8(pos + 9) == nComps, s"expected a $nComps-component frame, got ${u8(pos + 9)}")
+          frame = JpegFrame(progressive, u16(pos + 7), u16(pos + 5), Vector.tabulate(nComps) { i =>
+            val hv = u8(pos + 11 + 3 * i)
+            require((hv >> 4) >= 1 && (hv >> 4) <= 2 && (hv & 0x0F) >= 1 && (hv & 0x0F) <= 2,
+              "only sampling factors 1..2 supported")
+            JpegComponent(u8(pos + 10 + 3 * i), hv >> 4, hv & 0x0F, u8(pos + 12 + 3 * i))
+          }, 0)
+          require(frame.width > 0 && frame.height > 0, "empty frame")
+          blocks = Array.tabulate(nComps)(ci =>
+            Array.fill(frame.paddedW(ci) * frame.paddedH(ci))(new Array[Int](64)))
+          pos += 2 + u16(pos + 2)
+        case 0xDA =>
+          require(frame != null, "SOS before SOF")
+          val ns = u8(pos + 4)
+          val comps = Vector.tabulate(ns) { i =>
+            val ci = frame.comps.indexWhere(_.id == u8(pos + 5 + 2 * i))
+            require(ci >= 0, s"scan names unknown component ${u8(pos + 5 + 2 * i)}")
+            ci
+          }
+          require(ns >= 1 && comps == comps.sorted.distinct, "SOS order must match SOF")
+          val dcTabs = new Array[JpegHuffTable](nComps)
+          val acTabs = new Array[JpegHuffTable](nComps)
+          for (i <- 0 until ns) {
+            val tdta = u8(pos + 6 + 2 * i)
+            dcTabs(comps(i)) = huff(0)(tdta >> 4); acTabs(comps(i)) = huff(1)(tdta & 0x0F)
+          }
+          val ss = u8(pos + 5 + 2 * ns); val se = u8(pos + 6 + 2 * ns)
+          val ah = u8(pos + 7 + 2 * ns) >> 4; val al = u8(pos + 7 + 2 * ns) & 0x0F
+          if (progressive) {
+            require(ss <= se && se <= 63, s"bad spectral band [$ss, $se]")
+            require(ns == 1 || ss == 0, "interleaved progressive scans are DC-only")
+          } else require(ss == 0 && se == 63 && ah == 0 && al == 0, "baseline full-spectral scan expected")
+          frame = frame.copy(restartInterval = restartInterval)
+          val (seq, comp, every) = jpegScanOrder(frame, blocks, comps)
+          val br = new JpegBitReader(bytes, pos + 2 + u16(pos + 2))
+          progDecodeScan(br, seq, comp, every, ss, se, ah, al, dcTabs, acTabs, baseline = !progressive)
+          scans += 1
+          pos = br.pos
+        case x if (x >= 0xE0 && x <= 0xEF) || x == 0xFE => // APPn / COM
+          pos += 2 + u16(pos + 2)
+        case 0xD9 => done = true
+        case x => throw new IllegalArgumentException(f"unsupported marker 0x$x%02X")
+      }
+    }
+    require(scans > 0, "EOI before scan data")
+    JpegCoefs(frame, quant, blocks)
+  }
+
+  /** The plane stage: dequantize component `ci`'s blocks, run
+    * [[jpegIdctBlock]] (level shift + clamp included), and crop to its
+    * planeW × planeH pixels, row-major. Padding blocks are skipped.
+    */
+  private def jpegPlane(d: JpegCoefs, ci: Int): Array[Int] = {
+    val f = d.frame
+    val pw = f.planeW(ci); val ph = f.planeH(ci); val gw = f.paddedW(ci)
+    val qt = d.quantOf(ci)
+    val px = new Array[Int](pw * ph)
+    var b = 0
+    while (b < d.blocks(ci).length) {
+      val bx = b % gw; val by = b / gw
+      if (bx * 8 < pw && by * 8 < ph) {
+        val bp = jpegIdctBlock(d.blocks(ci)(b), qt)
+        var ly = 0
+        while (ly < 8) {
+          val y = by * 8 + ly
+          var lx = 0
+          while (lx < 8) {
+            val x = bx * 8 + lx
+            if (x < pw && y < ph) px(y * pw + x) = bp(ly * 8 + lx)
+            lx += 1
+          }
+          ly += 1
+        }
+      }
+      b += 1
+    }
+    px
+  }
+
+  /** Structurally decoded grayscale JPEG: dims + quantized coefficient
+    * blocks (natural order, raster block order) + the quant table that
+    * applies to them — the lossless layer, before IDCT.
     */
   final case class JpegRaw(width: Int, height: Int,
       quantZigzag: Array[Int], blocks: Array[Array[Int]])
 
   final case class JpegDecoded(width: Int, height: Int, pixels: Array[Int])
 
-  /** Parse + entropy-decode a baseline JFIF stream down to quantized
-    * coefficients. Real parser: every field below comes from the BYTES.
+  /** Decoded color JPEG: three planes, Y at (width × height), chroma at
+    * (chromaWidth × chromaHeight) = ceil-divided by the luma sampling
+    * factors (half in both axes for 4:2:0, half-width for 4:2:2, full
+    * for 4:4:4), row-major.
     */
-  private[pipeline] def jpegDecodeRaw(bytes: Array[Byte]): JpegRaw = {
-    def u8(i: Int): Int = {
-      require(i < bytes.length, "truncated JPEG"); bytes(i) & 0xFF
-    }
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    require(bytes.length >= 4 && u8(0) == 0xFF && u8(1) == 0xD8, "not a JPEG: missing SOI")
-    var pos = 2
-    val quant = new Array[Array[Int]](4)
-    val huff = Array.fill(2, 4)(null: JpegHuffTable)
-    var w = -1; var h = -1; var compQuantId = -1
-    var dcId = -1; var acId = -1
-    var scanAt = -1
-    while (scanAt < 0) {
-      require(u8(pos) == 0xFF, f"expected marker at $pos, got 0x${u8(pos)}%02X")
-      val m = u8(pos + 1)
-      m match {
-        case 0xDB => pos = jpegParseDqt(bytes, pos, quant)
-        case 0xC4 => pos = jpegParseDht(bytes, pos, huff)
-        case 0xC0 => // SOF0 baseline
-          require(u8(pos + 4) == 8, "only 8-bit precision supported")
-          h = u16(pos + 5); w = u16(pos + 7)
-          require(u8(pos + 9) == 1, "only single-component (grayscale) scans supported")
-          require(u8(pos + 11) == 0x11, "only 1x1 sampling supported")
-          compQuantId = u8(pos + 12)
-          pos += 2 + u16(pos + 2)
-        case 0xDA => // SOS
-          require(u8(pos + 4) == 1, "single-component scan expected")
-          dcId = u8(pos + 6) >> 4; acId = u8(pos + 6) & 0x0F
-          require(u8(pos + 7) == 0 && u8(pos + 8) == 63,
-            "baseline full-spectral scan expected")
-          scanAt = pos + 2 + u16(pos + 2)
-        case x if (x >= 0xE0 && x <= 0xEF) || x == 0xFE => // APPn / COM
-          pos += 2 + u16(pos + 2)
-        case 0xD9 => throw new IllegalArgumentException("EOI before scan data")
-        case x if x >= 0xC1 && x <= 0xCF =>
-          throw new IllegalArgumentException(
-            f"unsupported SOF marker 0x$x%02X (only baseline SOF0)")
-        case x => throw new IllegalArgumentException(f"unsupported marker 0x$x%02X")
-      }
-    }
-    require(w > 0 && h > 0, "missing SOF0 before SOS")
-    val qt = quant(compQuantId)
-    require(qt != null, s"missing quant table $compQuantId")
-    val dcTab = huff(0)(dcId); val acTab = huff(1)(acId)
-    require(dcTab != null && acTab != null, "missing Huffman tables for scan")
-    val bwBlocks = (w + 7) / 8; val bhBlocks = (h + 7) / 8
-    val br = new JpegBitReader(bytes, scanAt)
-    val blocks = new Array[Array[Int]](bwBlocks * bhBlocks)
-    var pred = 0
-    var b = 0
-    while (b < blocks.length) {
-      val (coefs, dc) = jpegReadBlock(br, dcTab, acTab, pred)
-      pred = dc
-      blocks(b) = coefs
-      b += 1
-    }
-    // after the scan: padding bits then EOI
-    require(br.pos + 1 < bytes.length &&
-      (bytes(br.pos) & 0xFF) == 0xFF && (bytes(br.pos + 1) & 0xFF) == 0xD9,
-      "missing EOI after entropy scan")
-    JpegRaw(w, h, qt, blocks)
+  final case class JpegColorDecoded(width: Int, height: Int,
+      chromaWidth: Int, chromaHeight: Int,
+      yPlane: Array[Int], cbPlane: Array[Int], crPlane: Array[Int])
+
+  private def jpegRaw(d: JpegCoefs): JpegRaw =
+    JpegRaw(d.frame.width, d.frame.height, d.quantOf(0), jpegScanOrder(d.frame, d.blocks, Seq(0))._1)
+
+  private def jpegGray(d: JpegCoefs): JpegDecoded =
+    JpegDecoded(d.frame.width, d.frame.height, jpegPlane(d, 0))
+
+  private def jpegColor(d: JpegCoefs): JpegColorDecoded = {
+    val f = d.frame
+    require(f.planeW(1) == f.planeW(2) && f.planeH(1) == f.planeH(2),
+      "Cb/Cr sampling factors must match")
+    JpegColorDecoded(f.width, f.height, f.planeW(1), f.planeH(1),
+      jpegPlane(d, 0), jpegPlane(d, 1), jpegPlane(d, 2))
   }
 
-  /** Full decode: [[jpegDecodeRaw]] + dequantization + the exact integer
-    * IDCT + level shift + clamp + partial-MCU crop. Pixels row-major.
+  /** Per-doc features of a grayscale JPEG corpus (q167, q175): dims,
+    * mean luminance, top/bottom row luminance sums.
     */
-  private[pipeline] def jpegDecode(bytes: Array[Byte]): JpegDecoded =
-    jpegRawToPixels(jpegDecodeRaw(bytes))
-
-  /** Shared pixel stage (dequant + integer IDCT + crop) over a decoded
-    * coefficient grid — used by both the baseline and progressive paths.
-    */
-  private def jpegRawToPixels(raw: JpegRaw): JpegDecoded = {
-    val w = raw.width; val h = raw.height
-    val bwBlocks = (w + 7) / 8
-    val pixels = new Array[Int](w * h)
-    var b = 0
-    while (b < raw.blocks.length) {
-      val px = jpegIdctBlock(raw.blocks(b), raw.quantZigzag)
-      val bx = b % bwBlocks; val by = b / bwBlocks
-      var ly = 0
-      while (ly < 8) {
-        val y = by * 8 + ly
-        var lx = 0
-        while (lx < 8) {
-          val x = bx * 8 + lx
-          if (x < w && y < h) pixels(y * w + x) = px(ly * 8 + lx)
-          lx += 1
-        }
-        ly += 1
-      }
-      b += 1
-    }
-    JpegDecoded(w, h, pixels)
-  }
-
-  /** The synthesized JPEG corpus: (doc_id, media) with a real baseline
-    * JFIF payload.
-    */
-  def jpegTable(spark: SparkSession, dir: String): DataFrame = {
+  private def jpegLumaFeatures(spark: SparkSession, dir: String,
+      encode: Long => Array[Byte], decode: Array[Byte] => JpegDecoded): DataFrame = {
     import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, jpegEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
-  /** Declared query (q167): decode the JPEG corpus and emit per-doc
-    * features — dimensions, mean luminance, top/bottom row luminance
-    * sums. The oracle regenerates the quantized coefficients from the
-    * synthesis formulas and replays dequant + the same integer IDCT in
-    * SQL, so every decoder stage (marker walk, DHT canonical codes, bit
-    * reader, unstuffing, DC prediction, de-zigzag, dequant, IDCT
-    * constants) is load-bearing.
-    */
-  def jpegFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    jpegTable(spark, dir)
+    encodedCorpus(spark, dir)(encode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
-        val d = jpegDecode(bytes)
+        val d = decode(bytes)
         var sum = 0L; var topSum = 0L; var botSum = 0L
         var p = 0
         while (p < d.pixels.length) {
@@ -1559,6 +1974,85 @@ object Multimodal {
         col("top_row_lum"), col("bot_row_lum"))
       .orderBy(col("doc_id"))
   }
+
+  /** Per-doc plane features of a color JPEG corpus (q174, q179): dims,
+    * mean of each plane (chroma means pin the table-id and interleave
+    * order: a Cb/Cr swap or a luma-table mixup shifts them), and the Y
+    * plane's bottom-row sum (cumulative MCU walk sensitivity).
+    */
+  private def jpegPlaneFeatures(spark: SparkSession, dir: String,
+      encode: Long => Array[Byte], decode: Array[Byte] => JpegColorDecoded): DataFrame = {
+    import spark.implicits._
+    encodedCorpus(spark, dir)(encode)
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.map { case (id, bytes) =>
+        val d = decode(bytes)
+        val cw = d.chromaWidth; val ch = d.chromaHeight
+        var ySum = 0L; var cbSum = 0L; var crSum = 0L; var yBot = 0L
+        var i = 0
+        while (i < d.yPlane.length) { ySum += d.yPlane(i); i += 1 }
+        i = 0
+        while (i < d.cbPlane.length) { cbSum += d.cbPlane(i); crSum += d.crPlane(i); i += 1 }
+        var x = 0
+        while (x < d.width) { yBot += d.yPlane((d.height - 1) * d.width + x); x += 1 }
+        (id, d.width, d.height,
+          ySum.toDouble / (d.width.toLong * d.height),
+          cbSum.toDouble / (cw.toLong * ch),
+          crSum.toDouble / (cw.toLong * ch),
+          yBot)
+      })
+      .toDF("doc_id", "width", "height", "mean_y_raw", "mean_cb_raw", "mean_cr_raw", "y_bot_row")
+      .select(
+        col("doc_id"), col("width"), col("height"),
+        round(col("mean_y_raw"), 4).as("mean_y"),
+        round(col("mean_cb_raw"), 4).as("mean_cb"),
+        round(col("mean_cr_raw"), 4).as("mean_cr"),
+        col("y_bot_row"))
+      .orderBy(col("doc_id"))
+  }
+
+  // ---- baseline grayscale JPEG (q167) -------------------------------------
+
+  /** Encode ARBITRARY quantized-coefficient blocks (natural-order 64-int
+    * arrays, raster block order for a (w, h) grayscale image) as a
+    * spec-compliant baseline JFIF stream. Split out of [[jpegEncode]] so
+    * the property suite can round-trip arbitrary coefficient grids
+    * through the real codec.
+    */
+  private[pipeline] def jpegEncodeImage(blocks: Array[Array[Int]], w: Int, h: Int): Array[Byte] =
+    jpegEncodeFrame(jpegGrayFrame(progressive = false, w, h, 0), jpegBaselineScript(1), Array(blocks))
+
+  /** Encode the synthesized corpus image for `docId` (coefficients from
+    * the integer formulas).
+    */
+  private[pipeline] def jpegEncode(docId: Long): Array[Byte] = {
+    val f = jpegGrayFrame(progressive = false, jpegWidth(docId), jpegHeight(docId), 0)
+    jpegEncodeFrame(f, jpegBaselineScript(1),
+      jpegSynthBlocks(f)((_, b) => jpegDc(docId, b), (_, b, u, v) => jpegAc(docId, b, u, v)))
+  }
+
+  /** Parse + entropy-decode a baseline grayscale JFIF stream down to
+    * quantized coefficients.
+    */
+  private[pipeline] def jpegDecodeRaw(bytes: Array[Byte]): JpegRaw =
+    jpegRaw(jpegDecodeCoefs(bytes, progressive = false, 1))
+
+  /** Full decode: entropy decode + dequantization + the exact integer
+    * IDCT + level shift + clamp + partial-MCU crop. Pixels row-major.
+    */
+  private[pipeline] def jpegDecode(bytes: Array[Byte]): JpegDecoded =
+    jpegGray(jpegDecodeCoefs(bytes, progressive = false, 1))
+
+  /** Declared query (q167): decode the JPEG corpus and emit per-doc
+    * features — dimensions, mean luminance, top/bottom row luminance
+    * sums. The oracle regenerates the quantized coefficients from the
+    * synthesis formulas and replays dequant + the same integer IDCT in
+    * SQL, so every decoder stage (marker walk, DHT canonical codes, bit
+    * reader, unstuffing, DC prediction, de-zigzag, dequant, IDCT
+    * constants) is load-bearing.
+    */
+  def jpegFeatures(spark: SparkSession, dir: String): DataFrame =
+    jpegLumaFeatures(spark, dir, jpegEncode, jpegDecode)
 
   /** The [[JpegIdctK]] table rendered as a SQL VALUES list `(i, j, k)` —
     * the q167 oracle inlines it so oracle and decoder share ONE
@@ -1632,299 +2126,32 @@ object Multimodal {
 
   /** Encode the synthesized color image for `docId`: a spec-compliant
     * interleaved-MCU baseline JFIF (Y at the doc's sampling factors
-    * quant 0 tables 0; Cb/Cr 1×1 quant 1 tables 1).
+    * quant 0 tables 0; Cb/Cr 1×1 quant 1 tables 1). DRI 1: restart
+    * every MCU — multi-MCU images then carry real RSTn markers
+    * (byte-aligned, DC prediction reset, marker id cycling), the
+    * recovery scaffolding every hardened JPEG stream uses.
     */
   private[pipeline] def jpegColorEncode(docId: Long): Array[Byte] = {
-    val w = jpegColorWidth(docId); val h = jpegColorHeight(docId)
-    val (hy, vy) = jpegColorSampling(docId)
-    val mcuCols = (w + 8 * hy - 1) / (8 * hy); val mcuRows = (h + 8 * vy - 1) / (8 * vy)
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xFF); out.write(0xD8)
-    marker(out, 0xE0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    // DQT: BOTH tables in one segment (decoder must loop)
-    val dqt = new java.io.ByteArrayOutputStream()
-    for ((tq, f) <- Seq((0, jpegQuant _), (1, jpegQuantChroma _))) {
-      dqt.write(tq)
-      var k = 0
-      while (k < 64) {
-        val nat = JpegZigzag(k); dqt.write(f(nat % 8, nat / 8)); k += 1
-      }
-    }
-    marker(out, 0xDB, dqt.toByteArray)
-    // SOF0: 3 components — Y (doc sampling, Tq 0), Cb/Cr (1x1, Tq 1)
-    marker(out, 0xC0, Array[Byte](
-      8, (h >> 8).toByte, (h & 0xFF).toByte, (w >> 8).toByte, (w & 0xFF).toByte,
-      3, 1, ((hy << 4) | vy).toByte, 0, 2, 0x11, 1, 3, 0x11, 1))
-    // DHT: FOUR tables in one segment (DC0, AC0, DC1, AC1 — same
-    // BITS/HUFFVAL content under distinct ids; the decoder must still
-    // select by the id each scan component names)
-    val dht = new java.io.ByteArrayOutputStream()
-    for (tcth <- Seq(0x00, 0x10, 0x01, 0x11)) {
-      dht.write(tcth)
-      if ((tcth >> 4) == 0) { JpegDcBits.foreach(dht.write); JpegDcVals.foreach(dht.write) }
-      else { JpegAcBits.foreach(dht.write); JpegAcVals.foreach(dht.write) }
-    }
-    marker(out, 0xC4, dht.toByteArray)
-    // DRI: restart every MCU — multi-MCU images then carry real RSTn
-    // markers (byte-aligned, DC prediction reset, marker id cycling),
-    // the recovery scaffolding every hardened JPEG stream uses
-    marker(out, 0xDD, Array[Byte](0, 1))
-    // SOS: 3 components, each naming its table pair
-    marker(out, 0xDA, Array[Byte](3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0))
-    val dcCodes = huffAssign(JpegDcBits, JpegDcVals)
-    val acCodes = huffAssign(JpegAcBits, JpegAcVals)
-    val bw2 = new JpegBitWriter(out)
-    def encodeBlock(comp: Int, b: Int, pred: Int): Int = {
-      val coefs = new Array[Int](64)
-      coefs(0) = jpegColorDc(docId, comp, b)
-      var v = 0
-      while (v < 8) {
-        var u = 0
-        while (u < 8) {
-          if (u != 0 || v != 0) coefs(v * 8 + u) = jpegColorAc(docId, comp, b, u, v)
-          u += 1
-        }
-        v += 1
-      }
-      jpegWriteBlock(bw2, dcCodes, acCodes, coefs, pred)
-    }
-    var predY = 0; var predCb = 0; var predCr = 0
-    val nMcus = mcuCols * mcuRows
-    var mcuIdx = 0
-    var rstM = 0
-    var my = 0
-    while (my < mcuRows) {
-      var mx = 0
-      while (mx < mcuCols) {
-        // Y: hy×vy blocks, left-to-right then top-to-bottom
-        var by2 = 0
-        while (by2 < vy) {
-          var bx2 = 0
-          while (bx2 < hy) {
-            val b = (my * vy + by2) * (mcuCols * hy) + (mx * hy + bx2)
-            predY = encodeBlock(0, b, predY)
-            bx2 += 1
-          }
-          by2 += 1
-        }
-        val bC = my * mcuCols + mx
-        predCb = encodeBlock(1, bC, predCb)
-        predCr = encodeBlock(2, bC, predCr)
-        mcuIdx += 1
-        if (mcuIdx < nMcus) { // DRI interval 1: restart between every MCU pair
-          bw2.restart(rstM); rstM = (rstM + 1) & 7
-          predY = 0; predCb = 0; predCr = 0
-        }
-        mx += 1
-      }
-      my += 1
-    }
-    bw2.finish()
-    out.write(0xFF); out.write(0xD9)
-    out.toByteArray
+    val f = jpegColorFrame(progressive = false, jpegColorWidth(docId), jpegColorHeight(docId),
+      jpegColorSampling(docId), restartEvery = 1)
+    jpegEncodeFrame(f, jpegBaselineScript(3), jpegSynthBlocks(f)(
+      (ci, b) => jpegColorDc(docId, ci, b), (ci, b, u, v) => jpegColorAc(docId, ci, b, u, v)))
   }
 
-  /** Decoded color JPEG: three planes, Y at (width × height), chroma at
-    * (chromaWidth × chromaHeight) = ceil-divided by the luma sampling
-    * factors (half in both axes for 4:2:0, half-width for 4:2:2, full
-    * for 4:4:4), row-major.
-    */
-  final case class JpegColorDecoded(width: Int, height: Int,
-      chromaWidth: Int, chromaHeight: Int,
-      yPlane: Array[Int], cbPlane: Array[Int], crPlane: Array[Int])
-
-  /** REAL interleaved-MCU decoder. Generalizes the grayscale path: SOF0
+  /** REAL interleaved-MCU decode of a baseline 3-component stream: SOF0
     * sampling factors, per-component quant + Huffman selection from the
     * SOS mapping, the MCU interleave walk, per-component DC prediction,
-    * and per-plane crop. Supports the common (hmax ≤ 2, vmax ≤ 2)
-    * sampling grid.
+    * and per-plane crop. Supports sampling factors 1..2.
     */
-  private[pipeline] def jpegColorDecode(bytes: Array[Byte]): JpegColorDecoded = {
-    def u8(i: Int): Int = { require(i < bytes.length, "truncated JPEG"); bytes(i) & 0xFF }
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    require(bytes.length >= 4 && u8(0) == 0xFF && u8(1) == 0xD8, "not a JPEG: missing SOI")
-    var pos = 2
-    val quant = new Array[Array[Int]](4)
-    val huff = Array.fill(2, 4)(null: JpegHuffTable)
-    var w = -1; var h = -1
-    // per component (SOF order): id, hSamp, vSamp, quantId; SOS adds dc/ac ids
-    var compIds: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
-    var compQ: Array[Int] = null
-    var compDc: Array[Int] = null
-    var compAc: Array[Int] = null
-    var restartInterval = 0
-    var scanAt = -1
-    while (scanAt < 0) {
-      require(u8(pos) == 0xFF, f"expected marker at $pos")
-      val m = u8(pos + 1)
-      m match {
-        case 0xDD => // DRI: restart interval in MCUs
-          restartInterval = u16(pos + 4)
-          pos += 2 + u16(pos + 2)
-        case 0xDB => pos = jpegParseDqt(bytes, pos, quant)
-        case 0xC4 => pos = jpegParseDht(bytes, pos, huff)
-        case 0xC0 =>
-          require(u8(pos + 4) == 8, "only 8-bit precision supported")
-          h = u16(pos + 5); w = u16(pos + 7)
-          val n = u8(pos + 9)
-          compIds = new Array[Int](n); compH = new Array[Int](n)
-          compV = new Array[Int](n); compQ = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            compIds(i) = u8(pos + 10 + 3 * i)
-            val hv = u8(pos + 11 + 3 * i)
-            compH(i) = hv >> 4; compV(i) = hv & 0x0F
-            require(compH(i) >= 1 && compH(i) <= 2 && compV(i) >= 1 && compV(i) <= 2,
-              "only sampling factors 1..2 supported")
-            compQ(i) = u8(pos + 12 + 3 * i)
-            i += 1
-          }
-          pos += 2 + u16(pos + 2)
-        case 0xDA =>
-          val n = u8(pos + 4)
-          require(compIds != null && n == compIds.length, "SOS/SOF component mismatch")
-          compDc = new Array[Int](n); compAc = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            require(u8(pos + 5 + 2 * i) == compIds(i), "SOS order must match SOF")
-            compDc(i) = u8(pos + 6 + 2 * i) >> 4
-            compAc(i) = u8(pos + 6 + 2 * i) & 0x0F
-            i += 1
-          }
-          scanAt = pos + 2 + u16(pos + 2)
-        case x if (x >= 0xE0 && x <= 0xEF) || x == 0xFE => pos += 2 + u16(pos + 2)
-        case x => throw new IllegalArgumentException(f"unsupported marker 0x$x%02X")
-      }
-    }
-    require(w > 0 && h > 0, "missing SOF0 before SOS")
-    val nComp = compIds.length
-    val hMax = compH.max; val vMax = compV.max
-    val mcuCols = (w + 8 * hMax - 1) / (8 * hMax)
-    val mcuRows = (h + 8 * vMax - 1) / (8 * vMax)
-    // per-component block grids + coefficient storage
-    val bwC = Array.tabulate(nComp)(i => mcuCols * compH(i))
-    val bhC = Array.tabulate(nComp)(i => mcuRows * compV(i))
-    val blocks = Array.tabulate(nComp)(i => new Array[Array[Int]](bwC(i) * bhC(i)))
-    val br = new JpegBitReader(bytes, scanAt)
-    val pred = new Array[Int](nComp)
-    val nMcus = mcuCols * mcuRows
-    var mcuIdx = 0
-    var rstM = 0
-    var my = 0
-    while (my < mcuRows) {
-      var mx = 0
-      while (mx < mcuCols) {
-        var ci = 0
-        while (ci < nComp) {
-          val dcTab = huff(0)(compDc(ci)); val acTab = huff(1)(compAc(ci))
-          require(dcTab != null && acTab != null, s"missing Huffman tables for comp $ci")
-          var bv = 0
-          while (bv < compV(ci)) {
-            var bu = 0
-            while (bu < compH(ci)) {
-              val (coefs, dc) = jpegReadBlock(br, dcTab, acTab, pred(ci))
-              pred(ci) = dc
-              blocks(ci)((my * compV(ci) + bv) * bwC(ci) + (mx * compH(ci) + bu)) = coefs
-              bu += 1
-            }
-            bv += 1
-          }
-          ci += 1
-        }
-        mcuIdx += 1
-        if (restartInterval > 0 && mcuIdx < nMcus && mcuIdx % restartInterval == 0) {
-          // byte-align, require the expected RSTm, reset every DC chain
-          br.expectRestart(rstM); rstM = (rstM + 1) & 7
-          java.util.Arrays.fill(pred, 0)
-        }
-        mx += 1
-      }
-      my += 1
-    }
-    require(br.pos + 1 < bytes.length &&
-      (bytes(br.pos) & 0xFF) == 0xFF && (bytes(br.pos + 1) & 0xFF) == 0xD9,
-      "missing EOI after entropy scan")
-    // IDCT + crop each plane to its own dims
-    def plane(ci: Int): (Int, Int, Array[Int]) = {
-      val pw = (w * compH(ci) + hMax - 1) / hMax
-      val ph = (h * compV(ci) + vMax - 1) / vMax
-      val px = new Array[Int](pw * ph)
-      val qt = quant(compQ(ci))
-      require(qt != null, s"missing quant table ${compQ(ci)}")
-      var b = 0
-      while (b < blocks(ci).length) {
-        val bp = jpegIdctBlock(blocks(ci)(b), qt)
-        val bx = b % bwC(ci); val by = b / bwC(ci)
-        var ly = 0
-        while (ly < 8) {
-          val y = by * 8 + ly
-          var lx = 0
-          while (lx < 8) {
-            val x = bx * 8 + lx
-            if (x < pw && y < ph) px(y * pw + x) = bp(ly * 8 + lx)
-            lx += 1
-          }
-          ly += 1
-        }
-        b += 1
-      }
-      (pw, ph, px)
-    }
-    require(nComp == 3, "color decode expects a 3-component scan")
-    val (_, _, yP) = plane(0)
-    val (cw, ch, cbP) = plane(1)
-    val (crW, crH, crP) = plane(2)
-    require(cw == crW && ch == crH, "Cb/Cr sampling factors must match")
-    JpegColorDecoded(w, h, cw, ch, yP, cbP, crP)
-  }
-
-  /** The synthesized COLOR JPEG corpus. */
-  def jpegColorTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, jpegColorEncode(id))))
-      .toDF("doc_id", "media")
-  }
+  private[pipeline] def jpegColorDecode(bytes: Array[Byte]): JpegColorDecoded =
+    jpegColor(jpegDecodeCoefs(bytes, progressive = false, 3))
 
   /** Declared query (q174): decode the color corpus and emit per-doc
-    * plane features — dims, mean of each plane (chroma means pin the
-    * table-id and interleave order: a Cb/Cr swap or a luma-table mixup
-    * shifts them), and the Y plane's bottom-row sum (cumulative MCU
-    * walk sensitivity). Oracle regenerates all three planes from the
+    * plane features. Oracle regenerates all three planes from the
     * per-component formulas + the shared integer IDCT.
     */
-  def jpegColorFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    jpegColorTable(spark, dir)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val d = jpegColorDecode(bytes)
-        val cw = d.chromaWidth; val ch = d.chromaHeight
-        var ySum = 0L; var cbSum = 0L; var crSum = 0L; var yBot = 0L
-        var i = 0
-        while (i < d.yPlane.length) { ySum += d.yPlane(i); i += 1 }
-        i = 0
-        while (i < d.cbPlane.length) { cbSum += d.cbPlane(i); crSum += d.crPlane(i); i += 1 }
-        var x = 0
-        while (x < d.width) { yBot += d.yPlane((d.height - 1) * d.width + x); x += 1 }
-        (id, d.width, d.height,
-          ySum.toDouble / (d.width.toLong * d.height),
-          cbSum.toDouble / (cw.toLong * ch),
-          crSum.toDouble / (cw.toLong * ch),
-          yBot)
-      })
-      .toDF("doc_id", "width", "height", "mean_y_raw", "mean_cb_raw", "mean_cr_raw", "y_bot_row")
-      .select(
-        col("doc_id"), col("width"), col("height"),
-        round(col("mean_y_raw"), 4).as("mean_y"),
-        round(col("mean_cb_raw"), 4).as("mean_cb"),
-        round(col("mean_cr_raw"), 4).as("mean_cr"),
-        col("y_bot_row"))
-      .orderBy(col("doc_id"))
-  }
+  def jpegColorFeatures(spark: SparkSession, dir: String): DataFrame =
+    jpegPlaneFeatures(spark, dir, jpegColorEncode, jpegColorDecode)
 
   // ---- PROGRESSIVE JPEG (SOF2): spectral selection + successive approx --
 
@@ -1984,228 +2211,16 @@ object Multimodal {
     }
   }
 
-  /** Progressive AC Huffman table: the baseline table's symbols PLUS the
-    * EOBn run codes (0x10..0x40 — runs of up to 31 blocks, far beyond
-    * this corpus's 12-block grids). Same canonical-order trick as
-    * [[JpegAcVals]]: nine never-emitted dummies absorb the 0-dense low
-    * codes so the stream stays 1-dense enough to exercise 0xFF00 byte
-    * stuffing; EOB0 (the most frequent symbol) sits on the all-but-one-
-    * ones code.
-    */
-  private val JpegProgAcBits: Array[Int] = { val a = new Array[Int](16); a(5) = 63; a }
-  private val JpegProgAcVals: Array[Int] =
-    (4 to 12).toArray ++ // 9 dummies: (run 0, size 4..12)
-      (for (r <- 15 to 0 by -1; s <- 1 to 3) yield (r << 4) | s) ++
-      Array(0x40, 0x30, 0x20, 0x10, 0xF0, 0x00) // EOB4..EOB1, ZRL, EOB0
-
-  /** One AC FIRST scan (Ah=0) for band [ss, se] at point transform
-    * `al`: baseline run/size coding of coef/2^Al (truncated toward
-    * zero), with trailing-zero blocks folded into cross-block EOB runs.
-    */
-  /** Longest EOB run the [[JpegProgAcVals]] table can name in one
-    * symbol: EOB4 covers (1<<4) + receive(4) = 16..31 blocks. Runs are
-    * flushed at this bound so longer empty stretches split into legal
-    * symbols (the spec's own bound is 32767 via EOB14 — this corpus's
-    * table stops at EOB4).
-    */
-  private val JpegProgMaxEobRun = 31
-
-  private def progWriteAcFirst(bw: JpegBitWriter, codes: Map[Int, (Int, Int)],
-      blocks: Array[Array[Int]], ss: Int, se: Int, al: Int,
-      restartEvery: Int = 0): Unit = {
-    var eobrun = 0
-    def flushEob(): Unit = if (eobrun > 0) {
-      val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-      val (c, l) = codes(r << 4); bw.write(c, l)
-      if (r > 0) bw.write(eobrun - (1 << r), r)
-      eobrun = 0
-    }
-    var rstM = 0
-    var b = 0
-    while (b < blocks.length) {
-      if (restartEvery > 0 && b > 0 && b % restartEvery == 0) {
-        // an EOB run may not span a restart boundary: flush, then the
-        // byte-aligned RSTn (in a non-interleaved scan, MCU = 1 block)
-        flushEob()
-        bw.restart(rstM); rstM = (rstM + 1) & 7
-      }
-      val coefs = blocks(b)
-      var run = 0
-      var k = ss
-      while (k <= se) {
-        val c = coefs(JpegZigzag(k))
-        val t = if (c >= 0) c >> al else -((-c) >> al)
-        if (t == 0) run += 1
-        else {
-          flushEob()
-          while (run > 15) { val (z, zl) = codes(0xF0); bw.write(z, zl); run -= 16 }
-          val s = jpegCategory(t)
-          require(s <= 3, s"AC value $t exceeds the table's size categories")
-          val (cc, cl) = codes((run << 4) | s); bw.write(cc, cl)
-          bw.write(if (t < 0) t + (1 << s) - 1 else t, s)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) { eobrun += 1; if (eobrun == JpegProgMaxEobRun) flushEob() }
-      b += 1
-    }
-    flushEob()
-  }
-
-  /** One AC REFINEMENT scan (Ah = Al+1) for band [ss, se]: emits, in
-    * EXACTLY the order the decoder's G.7 walk consumes them, (a) Huffman
-    * (run, 1) symbols + sign bits for newly-significant coefficients
-    * (|coef| >> Al == 1), (b) correction bits (bit Al of |coef|) for
-    * every already-significant coefficient the walk passes, (c) ZRL for
-    * >15 zero-HISTORY gaps (correction positions don't count toward the
-    * run), and (d) cross-block EOB runs whose pending correction bits
-    * trail the EOBn symbol block-by-block.
-    */
-  private def progWriteAcRefine(bw: JpegBitWriter, codes: Map[Int, (Int, Int)],
-      blocks: Array[Array[Int]], ss: Int, se: Int, al: Int,
-      restartEvery: Int = 0): Unit = {
-    var eobrun = 0
-    val pending = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def flushEob(): Unit = {
-      if (eobrun > 0) {
-        val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-        val (c, l) = codes(r << 4); bw.write(c, l)
-        if (r > 0) bw.write(eobrun - (1 << r), r)
-        eobrun = 0
-      }
-      pending.foreach(bit => bw.write(bit, 1))
-      pending.clear()
-    }
-    var rstM = 0
-    var b = 0
-    while (b < blocks.length) {
-      if (restartEvery > 0 && b > 0 && b % restartEvery == 0) {
-        flushEob() // run + its buffered correction bits end at the boundary
-        bw.restart(rstM); rstM = (rstM + 1) & 7
-      }
-      val coefs = blocks(b)
-      def temp(k: Int): Int = math.abs(coefs(JpegZigzag(k))) >> al
-      val newPos = (ss to se).filter(k => temp(k) == 1)
-      if (newPos.isEmpty) {
-        // no newly-significant coefficient: the block joins the EOB run;
-        // its band's correction bits ride behind the (future) EOBn symbol
-        eobrun += 1
-        var k = ss
-        while (k <= se) { if (temp(k) > 1) pending += (temp(k) & 1); k += 1 }
-        if (eobrun == JpegProgMaxEobRun) flushEob()
-      } else {
-        flushEob()
-        var cur = ss
-        for (np <- newPos) {
-          // the decoder walk consumes, per emitted symbol, the correction
-          // bits of the nonzero-history positions it passes — so each
-          // ZRL carries the corrections up to its 16th zero-history
-          // position, and the (run, 1) symbol carries the rest up to np
-          var segZeros = (cur until np).filter(k => temp(k) == 0)
-          while (segZeros.length > 15) {
-            val cut = segZeros(15) // the 16th zero-history position
-            val (z, zl) = codes(0xF0); bw.write(z, zl)
-            var k = cur
-            while (k < cut) { if (temp(k) > 1) bw.write(temp(k) & 1, 1); k += 1 }
-            cur = cut + 1
-            segZeros = segZeros.drop(16)
-          }
-          val (sc, sl) = codes((segZeros.length << 4) | 1); bw.write(sc, sl)
-          bw.write(if (coefs(JpegZigzag(np)) >= 0) 1 else 0, 1)
-          var k = cur
-          while (k < np) { if (temp(k) > 1) bw.write(temp(k) & 1, 1); k += 1 }
-          cur = np + 1
-        }
-        if (cur <= se) {
-          // trailing zero-history/correction positions: start an EOB run
-          eobrun += 1
-          var k = cur
-          while (k <= se) { if (temp(k) > 1) pending += (temp(k) & 1); k += 1 }
-          if (eobrun == JpegProgMaxEobRun) flushEob()
-        }
-      }
-      b += 1
-    }
-    flushEob()
-  }
-
   /** Encode ARBITRARY quantized-coefficient blocks as a spec-compliant
-    * SOF2 progressive JFIF with the six-scan script (DC first Al=1; AC
-    * 1–5 and 6–63 first Al=1; DC refine; AC 1–5 and 6–63 refine). Split
-    * out so the suite can round-trip crafted grids through the codec.
+    * SOF2 progressive JFIF with the six-scan script. Split out so the
+    * suite can round-trip crafted grids through the codec. For this
+    * single-component frame every scan is non-interleaved, so the DRI
+    * interval counts blocks.
     */
   private[pipeline] def jpegProgressiveEncodeImage(
       blocks: Array[Array[Int]], w: Int, h: Int,
-      restartEvery: Int = 0): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xFF); out.write(0xD8)
-    marker(out, 0xE0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = new Array[Byte](65)
-    dqt(0) = 0
-    var kq = 0
-    while (kq < 64) {
-      val nat = JpegZigzag(kq); dqt(1 + kq) = jpegQuant(nat % 8, nat / 8).toByte; kq += 1
-    }
-    marker(out, 0xDB, dqt)
-    // SOF2 — progressive DCT, 8-bit, single component 1x1
-    marker(out, 0xC2, Array[Byte](
-      8, (h >> 8).toByte, (h & 0xFF).toByte, (w >> 8).toByte, (w & 0xFF).toByte,
-      1, 1, 0x11, 0))
-    val dht = new java.io.ByteArrayOutputStream()
-    dht.write(0x00); JpegDcBits.foreach(dht.write); JpegDcVals.foreach(dht.write)
-    dht.write(0x10); JpegProgAcBits.foreach(dht.write); JpegProgAcVals.foreach(dht.write)
-    marker(out, 0xC4, dht.toByteArray)
-    // DRI: restart interval in MCUs — for this single-component frame
-    // every scan is non-interleaved, so one MCU = one block
-    if (restartEvery > 0)
-      marker(out, 0xDD, Array[Byte]((restartEvery >> 8).toByte, (restartEvery & 0xFF).toByte))
-    val dcCodes = huffAssign(JpegDcBits, JpegDcVals)
-    val acCodes = huffAssign(JpegProgAcBits, JpegProgAcVals)
-    def sos(ss: Int, se: Int, ah: Int, al: Int)(body: JpegBitWriter => Unit): Unit = {
-      marker(out, 0xDA, Array[Byte](1, 1, 0x00, ss.toByte, se.toByte, ((ah << 4) | al).toByte))
-      val bw = new JpegBitWriter(out)
-      body(bw)
-      bw.finish()
-    }
-    // scan 1: DC first, point transform 1 — prediction runs in the
-    // SHIFTED domain (arithmetic >> 1)
-    sos(0, 0, 0, 1) { bw =>
-      var pred = 0
-      var rstM = 0
-      var b = 0
-      while (b < blocks.length) {
-        if (restartEvery > 0 && b > 0 && b % restartEvery == 0) {
-          bw.restart(rstM); rstM = (rstM + 1) & 7; pred = 0
-        }
-        val t = blocks(b)(0) >> 1
-        val diff = t - pred; pred = t
-        val s = jpegCategory(diff)
-        val (c, l) = dcCodes(s); bw.write(c, l)
-        if (s > 0) bw.write(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        b += 1
-      }
-    }
-    // scans 2-3: AC first, two spectral bands
-    sos(1, 5, 0, 1)(bw => progWriteAcFirst(bw, acCodes, blocks, 1, 5, 1, restartEvery))
-    sos(6, 63, 0, 1)(bw => progWriteAcFirst(bw, acCodes, blocks, 6, 63, 1, restartEvery))
-    // scan 4: DC refinement — one raw bit per block, no Huffman
-    sos(0, 0, 1, 0) { bw =>
-      var rstM = 0
-      var b = 0
-      while (b < blocks.length) {
-        if (restartEvery > 0 && b > 0 && b % restartEvery == 0) {
-          bw.restart(rstM); rstM = (rstM + 1) & 7
-        }
-        bw.write(blocks(b)(0) & 1, 1); b += 1
-      }
-    }
-    // scans 5-6: AC refinement
-    sos(1, 5, 1, 0)(bw => progWriteAcRefine(bw, acCodes, blocks, 1, 5, 0, restartEvery))
-    sos(6, 63, 1, 0)(bw => progWriteAcRefine(bw, acCodes, blocks, 6, 63, 0, restartEvery))
-    out.write(0xFF); out.write(0xD9)
-    out.toByteArray
-  }
+      restartEvery: Int = 0): Array[Byte] =
+    jpegEncodeFrame(jpegGrayFrame(progressive = true, w, h, restartEvery), JpegProgGrayScript, Array(blocks))
 
   /** Encode the synthesized progressive corpus image for `docId` — odd
     * docs carry DRI 3, so every scan type (DC first/refine, AC
@@ -2215,159 +2230,10 @@ object Multimodal {
     * restart awareness.
     */
   private[pipeline] def jpegProgressiveEncode(docId: Long): Array[Byte] = {
-    val w = jpegProgWidth(docId); val h = jpegProgHeight(docId)
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    val blocks = Array.tabulate(bw * bh) { b =>
-      val coefs = new Array[Int](64)
-      coefs(0) = jpegProgDc(docId, b)
-      var v = 0
-      while (v < 8) {
-        var u = 0
-        while (u < 8) {
-          if (u != 0 || v != 0) coefs(v * 8 + u) = jpegProgAc(docId, b, u, v)
-          u += 1
-        }
-        v += 1
-      }
-      coefs
-    }
-    jpegProgressiveEncodeImage(blocks, w, h,
+    val f = jpegGrayFrame(progressive = true, jpegProgWidth(docId), jpegProgHeight(docId),
       restartEvery = if (docId % 2 == 1) 3 else 0)
-  }
-
-  /** Decode ONE progressive scan into the accumulating coefficient
-    * blocks, per G.1.2/G.2 of the spec (the jdphuff walk): DC first/
-    * refine, AC first with EOB runs and ZRL, AC refine with the
-    * correction-bit walk.
-    */
-  private def progDecodeScan(br: JpegBitReader, blocks: Array[Array[Int]],
-      ss: Int, se: Int, ah: Int, al: Int,
-      dcTab: JpegHuffTable, acTab: JpegHuffTable,
-      restartInterval: Int = 0): Unit = {
-    // restart bookkeeping shared by every branch: at each interval
-    // boundary the stream byte-aligns, carries the next RSTn of the
-    // cycle, and resets ALL entropy state (DC prediction, EOB run)
-    var rstM = 0
-    def atRestart(b: Int): Boolean =
-      restartInterval > 0 && b > 0 && b % restartInterval == 0
-    def consumeRestart(): Unit = {
-      br.expectRestart(rstM); rstM = (rstM + 1) & 7
-    }
-    if (ss == 0) {
-      require(se == 0, "a DC progressive scan must have Se = 0")
-      if (ah == 0) {
-        require(dcTab != null, "missing DC Huffman table for scan")
-        var pred = 0
-        var b = 0
-        while (b < blocks.length) {
-          if (atRestart(b)) { consumeRestart(); pred = 0 }
-          val s = dcTab.decode(br)
-          pred += jpegExtend(br.receive(s), s)
-          blocks(b)(0) = pred << al
-          b += 1
-        }
-      } else {
-        var b = 0
-        while (b < blocks.length) {
-          if (atRestart(b)) consumeRestart()
-          if (br.readBit() == 1) blocks(b)(0) |= (1 << al)
-          b += 1
-        }
-      }
-    } else {
-      require(acTab != null, "missing AC Huffman table for scan")
-      if (ah == 0) {
-        // AC first: baseline run/size within the band, values << Al,
-        // EOBn ends the band for (1<<r)+ext consecutive blocks
-        var eobrun = 0
-        var b = 0
-        while (b < blocks.length) {
-          if (atRestart(b)) {
-            // G.1.2.x: an EOB run may not span a restart boundary — the
-            // encoder flushes it, so a nonzero count here is a corrupt
-            // stream and must fail loudly, not silently drop the tail
-            require(eobrun == 0, "EOB run crosses a restart boundary")
-            consumeRestart()
-          }
-          if (eobrun > 0) eobrun -= 1
-          else {
-            val coefs = blocks(b)
-            var k = ss
-            var done = false
-            while (k <= se && !done) {
-              val rs = acTab.decode(br)
-              val r = rs >> 4; val s = rs & 0x0F
-              if (s == 0) {
-                if (r == 15) k += 16
-                else { eobrun = (1 << r) + (if (r > 0) br.receive(r) else 0) - 1; done = true }
-              } else {
-                k += r
-                require(k <= se, "AC run overflows the spectral band")
-                coefs(JpegZigzag(k)) = jpegExtend(br.receive(s), s) << al
-                k += 1
-              }
-            }
-          }
-          b += 1
-        }
-      } else {
-        // AC refinement — the G.7 walk: symbols name newly-significant
-        // coefficients; every already-nonzero coefficient the walk
-        // passes consumes one correction bit; EOB runs consume the
-        // remaining band corrections of each member block
-        val p1 = 1 << al
-        var eobrun = 0
-        var b = 0
-        while (b < blocks.length) {
-          if (atRestart(b)) {
-            require(eobrun == 0, "EOB run crosses a restart boundary")
-            consumeRestart()
-          }
-          val coefs = blocks(b)
-          def refine(nat: Int): Unit =
-            if (br.readBit() == 1 && (coefs(nat) & p1) == 0)
-              coefs(nat) += (if (coefs(nat) >= 0) p1 else -p1)
-          var k = ss
-          if (eobrun == 0) {
-            var ended = false
-            while (k <= se && !ended) {
-              val rs = acTab.decode(br)
-              var r = rs >> 4; val s = rs & 0x0F
-              var newVal = 0
-              if (s != 0) {
-                require(s == 1, "refinement symbols carry size 1 only")
-                newVal = if (br.readBit() == 1) p1 else -p1
-              } else if (r != 15) {
-                eobrun = (1 << r) + (if (r > 0) br.receive(r) else 0)
-                ended = true
-              } // r == 15, s == 0: ZRL — newVal stays 0, walk skips 16
-              if (!ended) {
-                var placed = false
-                while (k <= se && !placed) {
-                  val nat = JpegZigzag(k)
-                  if (coefs(nat) != 0) refine(nat)
-                  else if (r == 0) { if (newVal != 0) coefs(nat) = newVal; placed = true }
-                  else r -= 1
-                  k += 1
-                }
-                require(placed || newVal == 0, "refinement run overflows the band")
-              }
-            }
-          }
-          if (eobrun > 0) {
-            // EOB-run member (including the block that declared it):
-            // remaining nonzero-history positions consume correction bits
-            while (k <= se) {
-              val nat = JpegZigzag(k)
-              if (coefs(nat) != 0) refine(nat)
-              k += 1
-            }
-            eobrun -= 1
-          }
-          b += 1
-        }
-      }
-    }
+    jpegEncodeFrame(f, JpegProgGrayScript,
+      jpegSynthBlocks(f)((_, b) => jpegProgDc(docId, b), (_, b, u, v) => jpegProgAc(docId, b, u, v)))
   }
 
   /** Parse + entropy-decode a PROGRESSIVE (SOF2) grayscale JFIF stream
@@ -2375,74 +2241,14 @@ object Multimodal {
     * SOS segments, each scan accumulating bits/bands into the shared
     * coefficient grid until EOI.
     */
-  private[pipeline] def jpegProgressiveDecodeRaw(bytes: Array[Byte]): JpegRaw = {
-    def u8(i: Int): Int = { require(i < bytes.length, "truncated JPEG"); bytes(i) & 0xFF }
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    require(bytes.length >= 4 && u8(0) == 0xFF && u8(1) == 0xD8, "not a JPEG: missing SOI")
-    var pos = 2
-    val quant = new Array[Array[Int]](4)
-    val huff = Array.fill(2, 4)(null: JpegHuffTable)
-    var w = -1; var h = -1; var compQuantId = -1
-    var blocks: Array[Array[Int]] = null
-    var restartInterval = 0
-    var done = false
-    while (!done) {
-      require(u8(pos) == 0xFF, f"expected marker at $pos, got 0x${u8(pos)}%02X")
-      val m = u8(pos + 1)
-      m match {
-        case 0xDB => pos = jpegParseDqt(bytes, pos, quant)
-        case 0xC4 => pos = jpegParseDht(bytes, pos, huff)
-        case 0xC2 => // SOF2: progressive DCT
-          require(u8(pos + 4) == 8, "only 8-bit precision supported")
-          h = u16(pos + 5); w = u16(pos + 7)
-          require(u8(pos + 9) == 1, "only single-component (grayscale) progressive supported")
-          require(u8(pos + 11) == 0x11, "only 1x1 sampling supported")
-          compQuantId = u8(pos + 12)
-          blocks = Array.fill(((w + 7) / 8) * ((h + 7) / 8))(new Array[Int](64))
-          pos += 2 + u16(pos + 2)
-        case 0xDA =>
-          require(blocks != null, "SOS before SOF2")
-          require(u8(pos + 4) == 1, "single-component scan expected")
-          val dcId = u8(pos + 6) >> 4; val acId = u8(pos + 6) & 0x0F
-          val ss = u8(pos + 7); val se = u8(pos + 8)
-          val ah = u8(pos + 9) >> 4; val al = u8(pos + 9) & 0x0F
-          require(ss <= 63 && se <= 63 && ss <= se, s"bad spectral band [$ss, $se]")
-          val br = new JpegBitReader(bytes, pos + 2 + u16(pos + 2))
-          progDecodeScan(br, blocks, ss, se, ah, al,
-            huff(0)(dcId), huff(1)(acId), restartInterval)
-          pos = br.pos
-        case 0xDD =>
-          restartInterval = u16(pos + 4)
-          pos += 2 + u16(pos + 2)
-        case x if (x >= 0xE0 && x <= 0xEF) || x == 0xFE =>
-          pos += 2 + u16(pos + 2)
-        case 0xD9 => done = true
-        case 0xC0 =>
-          throw new IllegalArgumentException(
-            "baseline SOF0 stream fed to the progressive decoder")
-        case x => throw new IllegalArgumentException(f"unsupported marker 0x$x%02X")
-      }
-    }
-    require(w > 0 && h > 0, "missing SOF2")
-    val qt = quant(compQuantId)
-    require(qt != null, s"missing quant table $compQuantId")
-    JpegRaw(w, h, qt, blocks)
-  }
+  private[pipeline] def jpegProgressiveDecodeRaw(bytes: Array[Byte]): JpegRaw =
+    jpegRaw(jpegDecodeCoefs(bytes, progressive = true, 1))
 
   /** Full progressive decode: accumulate all scans, then the shared
     * dequant + integer IDCT + crop.
     */
   private[pipeline] def jpegProgressiveDecode(bytes: Array[Byte]): JpegDecoded =
-    jpegRawToPixels(jpegProgressiveDecodeRaw(bytes))
-
-  /** The synthesized progressive-JPEG corpus. */
-  def jpegProgressiveTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, jpegProgressiveEncode(id))))
-      .toDF("doc_id", "media")
-  }
+    jpegGray(jpegDecodeCoefs(bytes, progressive = true, 1))
 
   /** Declared query (q175): decode the progressive corpus and emit the
     * q167 feature shape. The oracle regenerates the coefficients from
@@ -2451,31 +2257,8 @@ object Multimodal {
     * EOB runs, the refinement walk) must be exact, or means/row sums
     * shift and the hash goes red.
     */
-  def jpegProgressiveFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    jpegProgressiveTable(spark, dir)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val d = jpegProgressiveDecode(bytes)
-        var sum = 0L; var topSum = 0L; var botSum = 0L
-        var p = 0
-        while (p < d.pixels.length) {
-          val y = p / d.width
-          val lum = d.pixels(p)
-          sum += lum
-          if (y == 0) topSum += lum
-          if (y == d.height - 1) botSum += lum
-          p += 1
-        }
-        (id, d.width, d.height, sum.toDouble / (d.width.toLong * d.height), topSum, botSum)
-      })
-      .toDF("doc_id", "width", "height", "mean_lum_raw", "top_row_lum", "bot_row_lum")
-      .select(
-        col("doc_id"), col("width"), col("height"),
-        round(col("mean_lum_raw"), 4).as("mean_lum"),
-        col("top_row_lum"), col("bot_row_lum"))
-      .orderBy(col("doc_id"))
-  }
+  def jpegProgressiveFeatures(spark: SparkSession, dir: String): DataFrame =
+    jpegLumaFeatures(spark, dir, jpegProgressiveEncode, jpegProgressiveDecode)
 
   // ---- PROGRESSIVE COLOR JPEG (SOF2, 3 components) -----------------------
 
@@ -2519,363 +2302,27 @@ object Multimodal {
     }
   }
 
-  /** Component geometry for the progressive color codec: returns, per
-    * component, (paddedGridWidth, paddedGridHeight, reducedGridWidth,
-    * reducedGridHeight, planeWidth, planeHeight).
-    */
-  private def progColorGeometry(w: Int, h: Int, hy: Int, vy: Int)
-      : Array[(Int, Int, Int, Int, Int, Int)] = {
-    val mcuCols = (w + 8 * hy - 1) / (8 * hy)
-    val mcuRows = (h + 8 * vy - 1) / (8 * vy)
-    Array.tabulate(3) { ci =>
-      val (ch, cv) = if (ci == 0) (hy, vy) else (1, 1)
-      val pw = (w * ch + hy - 1) / hy
-      val ph = (h * cv + vy - 1) / vy
-      (mcuCols * ch, mcuRows * cv, (pw + 7) / 8, (ph + 7) / 8, pw, ph)
-    }
-  }
-
-  /** Row-major REDUCED-grid view of a component's padded-grid block
-    * array — the block sequence non-interleaved scans walk. The arrays
-    * are shared by reference, so scan decoders mutate in place.
-    */
-  private def reducedSeq(blocks: Array[Array[Int]], paddedW: Int,
-      reducedW: Int, reducedH: Int): Array[Array[Int]] =
-    Array.tabulate(reducedW * reducedH) { i =>
-      blocks((i / reducedW) * paddedW + (i % reducedW))
-    }
-
   /** Encode the synthesized progressive-color image for `docId`: SOF2,
-    * eight scans (interleaved DC first; per-component AC firsts;
-    * interleaved DC refine; per-component AC refines), chroma on its
-    * own quant AND Huffman table ids.
+    * the eight-scan [[JpegProgColorScript]], chroma on its own quant AND
+    * Huffman table ids. Odd docs restart every 2 MCUs — in the
+    * interleaved DC scans an MCU is the full component cluster; in the
+    * non-interleaved AC scans an MCU is one block of that component's
+    * reduced grid.
     */
   private[pipeline] def jpegProgressiveColorEncode(docId: Long): Array[Byte] = {
-    val w = jpegProgColorWidth(docId); val h = jpegProgColorHeight(docId)
-    val (hy, vy) = jpegColorSampling(docId)
-    val geo = progColorGeometry(w, h, hy, vy)
-    val mcuCols = (w + 8 * hy - 1) / (8 * hy)
-    val mcuRows = (h + 8 * vy - 1) / (8 * vy)
-    val blocks = Array.tabulate(3) { ci =>
-      val (pgw, pgh, _, _, _, _) = geo(ci)
-      Array.tabulate(pgw * pgh) { b =>
-        val coefs = new Array[Int](64)
-        coefs(0) = jpegProgColorDc(docId, ci, b)
-        var v = 0
-        while (v < 8) {
-          var u = 0
-          while (u < 8) {
-            if (u != 0 || v != 0) coefs(v * 8 + u) = jpegProgColorAc(docId, ci, b, u, v)
-            u += 1
-          }
-          v += 1
-        }
-        coefs
-      }
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(0xFF); out.write(0xD8)
-    marker(out, 0xE0, Array[Byte]('J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0))
-    val dqt = new java.io.ByteArrayOutputStream()
-    for ((tq, f) <- Seq((0, jpegQuant _), (1, jpegQuantChroma _))) {
-      dqt.write(tq)
-      var k = 0
-      while (k < 64) { val nat = JpegZigzag(k); dqt.write(f(nat % 8, nat / 8)); k += 1 }
-    }
-    marker(out, 0xDB, dqt.toByteArray)
-    marker(out, 0xC2, Array[Byte](
-      8, (h >> 8).toByte, (h & 0xFF).toByte, (w >> 8).toByte, (w & 0xFF).toByte,
-      3, 1, ((hy << 4) | vy).toByte, 0, 2, 0x11, 1, 3, 0x11, 1))
-    // DC tables 0 (Y) and 1 (chroma), AC tables 0 (Y) and 1 (chroma) —
-    // same content under distinct ids: selection stays load-bearing
-    val dht = new java.io.ByteArrayOutputStream()
-    for (tcth <- Seq(0x00, 0x01)) {
-      dht.write(tcth); JpegDcBits.foreach(dht.write); JpegDcVals.foreach(dht.write)
-    }
-    for (tcth <- Seq(0x10, 0x11)) {
-      dht.write(tcth); JpegProgAcBits.foreach(dht.write); JpegProgAcVals.foreach(dht.write)
-    }
-    marker(out, 0xC4, dht.toByteArray)
-    // DRI: odd docs restart every 2 MCUs — in the interleaved DC scans
-    // an MCU is the full component cluster; in the non-interleaved AC
-    // scans an MCU is one block of that component's reduced grid
-    val restartEvery = if (docId % 2 == 1) 2 else 0
-    if (restartEvery > 0)
-      marker(out, 0xDD, Array[Byte](0, restartEvery.toByte))
-    val dcCodes = huffAssign(JpegDcBits, JpegDcVals)
-    val acCodes = huffAssign(JpegProgAcBits, JpegProgAcVals)
-    // scan 1: interleaved DC first (Al=1) — MCU walk, per-component
-    // shifted-domain prediction, each component through ITS DC table id
-    marker(out, 0xDA, Array[Byte](3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01))
-    val bw1 = new JpegBitWriter(out)
-    val pred = new Array[Int](3)
-    var rstM1 = 0
-    var mcuIdx1 = 0
-    var my = 0
-    while (my < mcuRows) {
-      var mx = 0
-      while (mx < mcuCols) {
-        if (restartEvery > 0 && mcuIdx1 > 0 && mcuIdx1 % restartEvery == 0) {
-          bw1.restart(rstM1); rstM1 = (rstM1 + 1) & 7
-          java.util.Arrays.fill(pred, 0)
-        }
-        mcuIdx1 += 1
-        var ci = 0
-        while (ci < 3) {
-          val (ch, cv) = if (ci == 0) (hy, vy) else (1, 1)
-          val pgw = geo(ci)._1
-          var by = 0
-          while (by < cv) {
-            var bx = 0
-            while (bx < ch) {
-              val b = (my * cv + by) * pgw + (mx * ch + bx)
-              val t = blocks(ci)(b)(0) >> 1
-              val diff = t - pred(ci); pred(ci) = t
-              val s = jpegCategory(diff)
-              val (c, l) = dcCodes(s); bw1.write(c, l)
-              if (s > 0) bw1.write(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mx += 1
-      }
-      my += 1
-    }
-    bw1.finish()
-    // scans 2-4: per-component AC first over the REDUCED grid (A.2.2)
-    for (ci <- 0 until 3) {
-      val (pgw, _, rgw, rgh, _, _) = geo(ci)
-      val ta = if (ci == 0) 0x00 else 0x01
-      marker(out, 0xDA, Array[Byte](1, (ci + 1).toByte, ta.toByte, 1, 63, 0x01))
-      val bw = new JpegBitWriter(out)
-      progWriteAcFirst(bw, acCodes, reducedSeq(blocks(ci), pgw, rgw, rgh),
-        1, 63, 1, restartEvery)
-      bw.finish()
-    }
-    // scan 5: interleaved DC refine — one raw bit per block, MCU order
-    marker(out, 0xDA, Array[Byte](3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10))
-    val bw5 = new JpegBitWriter(out)
-    var rstM5 = 0
-    var mcuIdx5 = 0
-    my = 0
-    while (my < mcuRows) {
-      var mx = 0
-      while (mx < mcuCols) {
-        if (restartEvery > 0 && mcuIdx5 > 0 && mcuIdx5 % restartEvery == 0) {
-          bw5.restart(rstM5); rstM5 = (rstM5 + 1) & 7
-        }
-        mcuIdx5 += 1
-        var ci = 0
-        while (ci < 3) {
-          val (ch, cv) = if (ci == 0) (hy, vy) else (1, 1)
-          val pgw = geo(ci)._1
-          var by = 0
-          while (by < cv) {
-            var bx = 0
-            while (bx < ch) {
-              bw5.write(blocks(ci)((my * cv + by) * pgw + (mx * ch + bx))(0) & 1, 1)
-              bx += 1
-            }
-            by += 1
-          }
-          ci += 1
-        }
-        mx += 1
-      }
-      my += 1
-    }
-    bw5.finish()
-    // scans 6-8: per-component AC refine over the same reduced grids
-    for (ci <- 0 until 3) {
-      val (pgw, _, rgw, rgh, _, _) = geo(ci)
-      val ta = if (ci == 0) 0x00 else 0x01
-      marker(out, 0xDA, Array[Byte](1, (ci + 1).toByte, ta.toByte, 1, 63, 0x10))
-      val bw = new JpegBitWriter(out)
-      progWriteAcRefine(bw, acCodes, reducedSeq(blocks(ci), pgw, rgw, rgh),
-        1, 63, 0, restartEvery)
-      bw.finish()
-    }
-    out.write(0xFF); out.write(0xD9)
-    out.toByteArray
+    val f = jpegColorFrame(progressive = true, jpegProgColorWidth(docId), jpegProgColorHeight(docId),
+      jpegColorSampling(docId), restartEvery = if (docId % 2 == 1) 2 else 0)
+    jpegEncodeFrame(f, JpegProgColorScript, jpegSynthBlocks(f)(
+      (ci, b) => jpegProgColorDc(docId, ci, b), (ci, b, u, v) => jpegProgColorAc(docId, ci, b, u, v)))
   }
 
-  /** REAL progressive-color decoder: SOF2 component/sampling parse,
+  /** REAL progressive-color decode: SOF2 component/sampling parse,
     * multi-SOS marker walk, interleaved DC scans over the MCU grid,
-    * non-interleaved AC scans over each component's REDUCED grid
-    * (delegating to the shared [[progDecodeScan]] walk), then the
-    * shared dequant + IDCT + per-plane crop.
+    * non-interleaved AC scans over each component's REDUCED grid, then
+    * the shared dequant + IDCT + per-plane crop.
     */
-  private[pipeline] def jpegProgressiveColorDecode(bytes: Array[Byte]): JpegColorDecoded = {
-    def u8(i: Int): Int = { require(i < bytes.length, "truncated JPEG"); bytes(i) & 0xFF }
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    require(bytes.length >= 4 && u8(0) == 0xFF && u8(1) == 0xD8, "not a JPEG: missing SOI")
-    var pos = 2
-    val quant = new Array[Array[Int]](4)
-    val huff = Array.fill(2, 4)(null: JpegHuffTable)
-    var w = -1; var h = -1
-    var compIds: Array[Int] = null
-    var compH: Array[Int] = null
-    var compV: Array[Int] = null
-    var compQ: Array[Int] = null
-    var geo: Array[(Int, Int, Int, Int, Int, Int)] = null
-    var blocks: Array[Array[Array[Int]]] = null
-    var mcuCols = -1; var mcuRows = -1
-    var restartInterval = 0
-    var done = false
-    while (!done) {
-      require(u8(pos) == 0xFF, f"expected marker at $pos")
-      val m = u8(pos + 1)
-      m match {
-        case 0xDD =>
-          restartInterval = u16(pos + 4)
-          pos += 2 + u16(pos + 2)
-        case 0xDB => pos = jpegParseDqt(bytes, pos, quant)
-        case 0xC4 => pos = jpegParseDht(bytes, pos, huff)
-        case 0xC2 =>
-          require(u8(pos + 4) == 8, "only 8-bit precision supported")
-          h = u16(pos + 5); w = u16(pos + 7)
-          val n = u8(pos + 9)
-          require(n == 3, "progressive color decode expects 3 components")
-          compIds = new Array[Int](n); compH = new Array[Int](n)
-          compV = new Array[Int](n); compQ = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            compIds(i) = u8(pos + 10 + 3 * i)
-            val hv = u8(pos + 11 + 3 * i)
-            compH(i) = hv >> 4; compV(i) = hv & 0x0F
-            require(compH(i) >= 1 && compH(i) <= 2 && compV(i) >= 1 && compV(i) <= 2,
-              "only sampling factors 1..2 supported")
-            compQ(i) = u8(pos + 12 + 3 * i)
-            i += 1
-          }
-          require(compH(1) == 1 && compV(1) == 1 && compH(2) == 1 && compV(2) == 1,
-            "chroma components must be 1x1")
-          geo = progColorGeometry(w, h, compH(0), compV(0))
-          mcuCols = (w + 8 * compH(0) - 1) / (8 * compH(0))
-          mcuRows = (h + 8 * compV(0) - 1) / (8 * compV(0))
-          blocks = Array.tabulate(3) { ci =>
-            Array.fill(geo(ci)._1 * geo(ci)._2)(new Array[Int](64))
-          }
-          pos += 2 + u16(pos + 2)
-        case 0xDA =>
-          require(blocks != null, "SOS before SOF2")
-          val ns = u8(pos + 4)
-          val hdrEnd = pos + 2 + u16(pos + 2)
-          if (ns > 1) {
-            // INTERLEAVED scan: progressive restricts these to DC
-            require(ns == 3, "interleaved scan must name all components")
-            val ss = u8(pos + 5 + 2 * ns); val se = u8(pos + 6 + 2 * ns)
-            val ahal = u8(pos + 7 + 2 * ns)
-            val ah = ahal >> 4; val al = ahal & 0x0F
-            require(ss == 0 && se == 0, "interleaved progressive scans are DC-only")
-            val dcTabs = Array.tabulate(ns) { i =>
-              require(u8(pos + 5 + 2 * i) == compIds(i), "SOS order must match SOF")
-              huff(0)(u8(pos + 6 + 2 * i) >> 4)
-            }
-            val br = new JpegBitReader(bytes, hdrEnd)
-            val pred = new Array[Int](3)
-            var rstM = 0
-            var mcuIdx = 0
-            var my = 0
-            while (my < mcuRows) {
-              var mx = 0
-              while (mx < mcuCols) {
-                if (restartInterval > 0 && mcuIdx > 0 && mcuIdx % restartInterval == 0) {
-                  br.expectRestart(rstM); rstM = (rstM + 1) & 7
-                  java.util.Arrays.fill(pred, 0)
-                }
-                mcuIdx += 1
-                var ci = 0
-                while (ci < 3) {
-                  val pgw = geo(ci)._1
-                  var by = 0
-                  while (by < compV(ci)) {
-                    var bx = 0
-                    while (bx < compH(ci)) {
-                      val b = (my * compV(ci) + by) * pgw + (mx * compH(ci) + bx)
-                      if (ah == 0) {
-                        require(dcTabs(ci) != null, "missing DC table for scan")
-                        val s = dcTabs(ci).decode(br)
-                        pred(ci) += jpegExtend(br.receive(s), s)
-                        blocks(ci)(b)(0) = pred(ci) << al
-                      } else if (br.readBit() == 1) blocks(ci)(b)(0) |= (1 << al)
-                      bx += 1
-                    }
-                    by += 1
-                  }
-                  ci += 1
-                }
-                mx += 1
-              }
-              my += 1
-            }
-            pos = br.pos
-          } else {
-            // NON-INTERLEAVED scan: the component's REDUCED grid, walked
-            // by the same shared scan decoder as the grayscale tier
-            val cid = u8(pos + 5)
-            val ci = compIds.indexOf(cid)
-            require(ci >= 0, s"scan names unknown component $cid")
-            val tdta = u8(pos + 6)
-            val ss = u8(pos + 7); val se = u8(pos + 8)
-            val ah = u8(pos + 9) >> 4; val al = u8(pos + 9) & 0x0F
-            val (pgw, _, rgw, rgh, _, _) = geo(ci)
-            val br = new JpegBitReader(bytes, hdrEnd)
-            progDecodeScan(br, reducedSeq(blocks(ci), pgw, rgw, rgh),
-              ss, se, ah, al, huff(0)(tdta >> 4), huff(1)(tdta & 0x0F),
-              restartInterval)
-            pos = br.pos
-          }
-        case x if (x >= 0xE0 && x <= 0xEF) || x == 0xFE => pos += 2 + u16(pos + 2)
-        case 0xD9 => done = true
-        case x => throw new IllegalArgumentException(f"unsupported marker 0x$x%02X")
-      }
-    }
-    require(w > 0 && h > 0, "missing SOF2")
-    def plane(ci: Int): (Int, Int, Array[Int]) = {
-      val (pgw, _, _, _, pw, ph) = geo(ci)
-      val qt = quant(compQ(ci))
-      require(qt != null, s"missing quant table ${compQ(ci)}")
-      val px = new Array[Int](pw * ph)
-      var b = 0
-      while (b < blocks(ci).length) {
-        val bx = b % pgw; val by = b / pgw
-        if (bx * 8 < pw && by * 8 < ph) {
-          val bp = jpegIdctBlock(blocks(ci)(b), qt)
-          var ly = 0
-          while (ly < 8) {
-            val y = by * 8 + ly
-            var lx = 0
-            while (lx < 8) {
-              val x = bx * 8 + lx
-              if (x < pw && y < ph) px(y * pw + x) = bp(ly * 8 + lx)
-              lx += 1
-            }
-            ly += 1
-          }
-        }
-        b += 1
-      }
-      (pw, ph, px)
-    }
-    val (_, _, yP) = plane(0)
-    val (cw, ch, cbP) = plane(1)
-    val (crW, crH, crP) = plane(2)
-    require(cw == crW && ch == crH, "Cb/Cr dims must match")
-    JpegColorDecoded(w, h, cw, ch, yP, cbP, crP)
-  }
-
-  /** The synthesized progressive-color corpus. */
-  def jpegProgressiveColorTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, jpegProgressiveColorEncode(id))))
-      .toDF("doc_id", "media")
-  }
+  private[pipeline] def jpegProgressiveColorDecode(bytes: Array[Byte]): JpegColorDecoded =
+    jpegColor(jpegDecodeCoefs(bytes, progressive = true, 3))
 
   /** Declared query (q179): decode the progressive-color corpus, q174's
     * feature shape. Oracle: the q174 plane-CTE structure over the q179
@@ -2883,35 +2330,8 @@ object Multimodal {
     * reduced-grid AC scans, per-component tables, successive
     * approximation) must reassemble the exact coefficients.
     */
-  def jpegProgressiveColorFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    jpegProgressiveColorTable(spark, dir)
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        val d = jpegProgressiveColorDecode(bytes)
-        val cw = d.chromaWidth; val ch = d.chromaHeight
-        var ySum = 0L; var cbSum = 0L; var crSum = 0L; var yBot = 0L
-        var i = 0
-        while (i < d.yPlane.length) { ySum += d.yPlane(i); i += 1 }
-        i = 0
-        while (i < d.cbPlane.length) { cbSum += d.cbPlane(i); crSum += d.crPlane(i); i += 1 }
-        var x = 0
-        while (x < d.width) { yBot += d.yPlane((d.height - 1) * d.width + x); x += 1 }
-        (id, d.width, d.height,
-          ySum.toDouble / (d.width.toLong * d.height),
-          cbSum.toDouble / (cw.toLong * ch),
-          crSum.toDouble / (cw.toLong * ch),
-          yBot)
-      })
-      .toDF("doc_id", "width", "height", "mean_y_raw", "mean_cb_raw", "mean_cr_raw", "y_bot_row")
-      .select(
-        col("doc_id"), col("width"), col("height"),
-        round(col("mean_y_raw"), 4).as("mean_y"),
-        round(col("mean_cb_raw"), 4).as("mean_cb"),
-        round(col("mean_cr_raw"), 4).as("mean_cr"),
-        col("y_bot_row"))
-      .orderBy(col("doc_id"))
-  }
+  def jpegProgressiveColorFeatures(spark: SparkSession, dir: String): DataFrame =
+    jpegPlaneFeatures(spark, dir, jpegProgressiveColorEncode, jpegProgressiveColorDecode)
 
   // ---- real VIDEO decode (YUV4MPEG2, planar 4:2:0) -----------------------
 
@@ -3045,17 +2465,6 @@ object Multimodal {
     Y4mDecoded(w, h, fs)
   }
 
-  /** The synthesized video corpus: (doc_id, media) with a real y4m
-    * payload.
-    */
-  def y4mTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, y4mEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q170): decode the video corpus and emit per-clip
     * features — dims, frame count, mean luma over all frames, mean Cb
     * (pins the chroma plane OFFSET: a stride slip reads Cr or luma
@@ -3067,7 +2476,7 @@ object Multimodal {
     */
   def y4mFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    y4mTable(spark, dir)
+    encodedCorpus(spark, dir)(y4mEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val d = y4mDecode(bytes)
@@ -3345,15 +2754,6 @@ object Multimodal {
     AdpcmDecoded(sampleRate, blockAlign, samplesPerBlock, out)
   }
 
-  /** The synthesized ADPCM corpus: (doc_id, media) with real 0x0011 payloads. */
-  def adpcmTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, adpcmEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q182): decode the compressed-audio corpus and emit
     * per-doc features — container fields (sample_rate, n_samples) plus
     * statistics over every DECODED sample (sum, peak, final predictor).
@@ -3363,7 +2763,7 @@ object Multimodal {
     */
   def adpcmFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    adpcmTable(spark, dir)
+    encodedCorpus(spark, dir)(adpcmEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val d = adpcmDecode(bytes)

@@ -3,8 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.rel.Queries.{spread, table}
-
 /** GVC — an entropy-coded, MOTION-COMPENSATED video codec, the layer the
   * reference corpus stack never reaches (its media handling stops at
   * whole-file bytes; see `/root/reference/src/master/file_shard.h:64`'s
@@ -666,6 +664,9 @@ object Video {
 
   /** Encode the q181 B-frame clip: coding order [I, P(2), B(1), P(3)]
     * with explicit temporal references driving the display reorder.
+    * Every clip carries the full GOP triad — an I-frame, a bidirectional
+    * B (display position 1, coded AFTER its backward anchor), and two P
+    * anchors.
     */
   private[pipeline] def gvcBEncode(docId: Long): Array[Byte] =
     gvcEncodeStream(gvcWidth(docId), gvcHeight(docId),
@@ -1120,18 +1121,6 @@ object Video {
 
   // ---- declared query -----------------------------------------------------
 
-  /** The synthesized motion-video corpus: (doc_id, media) with a real
-    * GVC payload. Per-doc bounded work, embarrassingly parallel — the
-    * same kernel shape every decode family uses.
-    */
-  def gvcTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, gvcEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q180): decode the motion-video corpus and emit
     * per-clip features spanning every codec layer — dims and frame
     * count (sequence header), macroblock mode counts and Σ|MV| (the
@@ -1194,7 +1183,7 @@ object Video {
 
   def gvcFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    gvcTable(spark, dir)
+    Multimodal.encodedCorpus(spark, dir)(gvcEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val f = gvcFeaturesOf(bytes)
@@ -1211,18 +1200,6 @@ object Video {
       .orderBy(col("doc_id"))
   }
 
-  /** The q181 corpus: every clip carries the full GOP triad — an
-    * I-frame, a bidirectional B (display position 1, coded AFTER its
-    * backward anchor), and two P anchors.
-    */
-  def gvcBTable(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spread(table(spark, dir, "documents").select(col("doc_id")))
-      .as[Long]
-      .mapPartitions(_.map(id => (id, gvcBEncode(id))))
-      .toDF("doc_id", "media")
-  }
-
   /** Declared query (q181): decode the B-frame corpus. On top of q180's
     * layers this gates frame REORDERING (coding order ≠ display order;
     * the temporal-reference walk and two-slot anchor tracking),
@@ -1233,7 +1210,7 @@ object Video {
     */
   def gvcBFeatures(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    gvcBTable(spark, dir)
+    Multimodal.encodedCorpus(spark, dir)(gvcBEncode)
       .as[(Long, Array[Byte])]
       .mapPartitions(_.map { case (id, bytes) =>
         val f = gvcBFeaturesOf(bytes)

@@ -327,6 +327,51 @@ object KernelProperties extends Properties("Kernels") {
         raw.blocks.map(_.toSeq).toSeq == blocks.map(_.toSeq).toSeq
     }
 
+  /** Arbitrary 3-component frames through the one JPEG codec: any dims
+    * (w mod 16 in 1..8 makes 2× sampled padded grids larger than the
+    * reduced ones), every sampling mode, DRI off or 1..3 MCUs. Baseline
+    * carries every padded-grid block; progressive AC scans walk only the
+    * reduced grids, so padding blocks come back with their DC alone.
+    */
+  private def colorRoundTrip(progressive: Boolean) =
+    forAll(
+      Gen.choose(1, 40), Gen.choose(1, 40), Gen.oneOf((2, 2), (2, 1), (1, 1)),
+      Gen.choose(0, 3), Gen.choose(0L, 1000000L)) { (w, h, sampling, dri, seed) =>
+      var s = seed
+      def next(mod: Int): Int = {
+        s = s * 6364136223846793005L + 1442695040888963407L
+        ((s >>> 33) % mod).toInt
+      }
+      val f = Multimodal.jpegColorFrame(progressive, w, h, sampling, dri)
+      val blocks = Array.tabulate(3) { ci =>
+        Array.fill(f.paddedW(ci) * f.paddedH(ci)) {
+          val c = new Array[Int](64)
+          c(0) = next(15) - 7
+          for (k <- 1 until 64 if next(100) < 15) c(k) = next(13) - 6
+          c
+        }
+      }
+      val script =
+        if (progressive) Multimodal.JpegProgColorScript else Multimodal.jpegBaselineScript(3)
+      val got = Multimodal.jpegDecodeCoefs(
+        Multimodal.jpegEncodeFrame(f, script, blocks), progressive, 3)
+      val expected = Array.tabulate(3) { ci =>
+        Array.tabulate(blocks(ci).length) { b =>
+          val inPlane = (b % f.paddedW(ci)) * 8 < f.planeW(ci) && (b / f.paddedW(ci)) * 8 < f.planeH(ci)
+          if (!progressive || inPlane) blocks(ci)(b).toSeq
+          else blocks(ci)(b)(0) +: Seq.fill(63)(0)
+        }.toSeq
+      }.toSeq
+      got.frame.width == w && got.frame.height == h &&
+        got.blocks.map(_.map(_.toSeq).toSeq).toSeq == expected
+    }
+
+  property("baseline color JPEG round-trips ARBITRARY 3-component grids: any sampling, DRI on and off") =
+    colorRoundTrip(progressive = false)
+
+  property("progressive color JPEG round-trips ARBITRARY 3-component grids: any sampling, DRI on and off") =
+    colorRoundTrip(progressive = true)
+
   property("GVC codec round-trips ARBITRARY mode/MV/coefficient grids under ANY restart interval") =
     forAll(
       Gen.choose(1, 4), Gen.choose(1, 3), Gen.choose(1, 4), Gen.choose(0, 3),

@@ -1599,6 +1599,52 @@ class PipelineSuite extends AnyFunSuite {
       assert(Multimodal.JpegIdctK(u)(x) == derived(u)(x), s"K($u)($x)")
   }
 
+  test("JPEG encoders: the corpus streams of docs 0..63 are byte-identical to the pinned digests") {
+    // whole-stream pins: the byte-patching tests below address DQT, DHT,
+    // SOF and RSTn bytes by offset, so any layout drift in the encoders
+    // (segment order, DHT table order, DRI placement) must go red here
+    def digest(encode: Long => Array[Byte]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      for (docId <- 0L until 64L) md.update(encode(docId))
+      md.digest().map(b => f"${b & 0xFF}%02x").mkString
+    }
+    val got = Seq(
+      "baseline gray" -> digest(Multimodal.jpegEncode),
+      "baseline color" -> digest(Multimodal.jpegColorEncode),
+      "progressive gray" -> digest(Multimodal.jpegProgressiveEncode),
+      "progressive color" -> digest(Multimodal.jpegProgressiveColorEncode))
+    val pinned = Seq(
+      "baseline gray" ->
+        "59652ae46c285e562e71886b917e08f526aaff629b35ea4fa8c8465ae396c8d2",
+      "baseline color" ->
+        "9a41a274ae88edd0a37069257e56c4d53626ba916804d362f233010422931236",
+      "progressive gray" ->
+        "11484cf2c7b508258f8867b80cb88142986760b6c9985d65d0f0621d764c492d",
+      "progressive color" ->
+        "da74bb598039d6e08a6a527b6452bf523f00297641b1c8771f4ae4a357582b1d")
+    assert(got == pinned)
+  }
+
+  test("JPEG decoders: each decodes its own format and rejects the other three") {
+    // two docs per format; the color formats cover 4:2:0 (doc 0) and
+    // 4:4:4 (doc 2)
+    val encoders = Seq[(String, Long => Array[Byte], Seq[Long])](
+      ("baseline gray", Multimodal.jpegEncode, Seq(0L, 1L)),
+      ("baseline color", Multimodal.jpegColorEncode, Seq(0L, 2L)),
+      ("progressive gray", Multimodal.jpegProgressiveEncode, Seq(0L, 1L)),
+      ("progressive color", Multimodal.jpegProgressiveColorEncode, Seq(0L, 2L)))
+    val decoders = Seq[(String, Array[Byte] => Any)](
+      ("baseline gray", Multimodal.jpegDecode),
+      ("baseline color", Multimodal.jpegColorDecode),
+      ("progressive gray", Multimodal.jpegProgressiveDecode),
+      ("progressive color", Multimodal.jpegProgressiveColorDecode))
+    for ((format, encode, docs) <- encoders; docId <- docs; (kind, decode) <- decoders) {
+      val bytes = encode(docId)
+      if (kind == format) decode(bytes)
+      else intercept[IllegalArgumentException](decode(bytes))
+    }
+  }
+
   test("JPEG codec: entropy round-trip recovers every quantized coefficient") {
     // doc_ids spanning every (w, h, crop) residue class: full blocks,
     // partial right/bottom blocks, multi-block DC prediction chains
